@@ -24,17 +24,31 @@ from pyspark.sql import functions as F
 from .ordering import RANK_COL, dedup_ordering
 
 
+def distinct_key_count(keys: Sequence[str]) -> Column:
+    """Aggregate expression: the number of distinct key tuples — the
+    group count of the dedup window, NULL keys included.
+
+    ``size(collect_set(struct(keys)))`` rather than ``count_distinct``:
+    a struct is never NULL, so a NULL-keyed row counts as its own group
+    exactly as the window (and merge_cdc's null-safe ``<=>`` join) treats
+    it, where ``count_distinct(*cols)`` would skip it; and it plans as a
+    plain partial/final aggregate with a single-task final stage instead
+    of a hash exchange on the keys.  The final stage holds the input's
+    distinct keys in one task: a per-file / micro-batch bound, the same
+    one the merge's staging broadcast already assumes."""
+    return F.size(F.collect_set(F.struct(*[F.col(k) for k in keys])))
+
+
 def needs_dedup(df: DataFrame, keys: Sequence[str]) -> bool:
     """True if the batch contains >1 row for any key.
 
-    One aggregation job: COUNT(*) vs COUNT(DISTINCT keys)
-    (reference: lambda/handler.py:422-431).  NOTE Spark's
-    ``count_distinct(*cols)`` skips rows where ANY key is NULL — same as
-    SQL ``COUNT(DISTINCT k1, k2)``; CDC keys are non-null by contract.
+    One aggregation job: COUNT(*) vs the distinct-key count
+    (reference: lambda/handler.py:422-431), with NULL keys grouped like
+    any other value (see :func:`distinct_key_count`).
     """
     row = df.agg(
         F.count(F.lit(1)).alias("total"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("uniq"),
+        distinct_key_count(keys).alias("uniq"),
     ).first()
     return int(row["total"]) != int(row["uniq"])
 

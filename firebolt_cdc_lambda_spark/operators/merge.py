@@ -988,13 +988,18 @@ class KeyedTable:
 
     def _write_epoch(self, bucketed: DataFrame, epoch: int,
                      sort_within: Sequence[str] = (),
-                     max_records_per_file: int | None = None) -> None:
+                     max_records_per_file: int | None = None,
+                     num_partitions: int | None = None) -> None:
         """Append ``bucketed`` (already carrying _bucket) as epoch
         ``epoch``.  Append-only: prior epochs are immutable, so readers
-        of any older version are never disturbed mid-write."""
+        of any older version are never disturbed mid-write.
+        ``num_partitions`` sizes the _bucket shuffle (default: the
+        session's shuffle partitions)."""
         self._clean_epoch_dirs(epoch)
-        shaped = (bucketed.withColumn(self.EPOCH_COL, F.lit(epoch))
-                  .repartition(self.BUCKET_COL))
+        shaped = bucketed.withColumn(self.EPOCH_COL, F.lit(epoch))
+        shaped = (shaped.repartition(num_partitions, self.BUCKET_COL)
+                  if num_partitions else
+                  shaped.repartition(self.BUCKET_COL))
         if sort_within:
             shaped = shaped.sortWithinPartitions(
                 self.BUCKET_COL, self.EPOCH_COL, *sort_within)
@@ -3165,16 +3170,22 @@ class KeyedTable:
 
     def _merge_impl(self, staging: DataFrame, dedup: bool, order=None,
                     **merge_kwargs) -> tuple[int, int, bool]:
-        from .dedup import deduplicate
+        from .dedup import deduplicate, distinct_key_count
         from .ordering import OP_COL
         # AQE off for the merge's jobs: every physical choice here is
         # already pinned (staging broadcast, bucket-glob pruned scan,
         # repartition on _bucket, dynamic partition overwrite), so adaptive
-        # re-planning only adds per-stage latency — measured 2.6 -> 2.0 s
-        # on the ~3k-row batch and 1.7 -> 1.1 s on the ~30-key batch at
-        # sf0.1/local[32].  Refcounted (fleet-concurrency-safe) disable;
-        # restored after the merge, so at cluster scale the big analytic
-        # queries (where AQE earns its keep) are unaffected.
+        # re-planning only adds per-stage latency.  Nothing coalesces
+        # shuffle partitions while it is off, so no stage here takes its
+        # width from spark.sql.shuffle.partitions: staging keeps the
+        # scan's partitioning (ingestion_seq is the Parquet row index,
+        # no window exchange), the fused aggregation has no exchange on
+        # the keys (its final stage is one task), and the dedup window
+        # and the bucket write shuffle to min(touched buckets,
+        # defaultParallelism) tasks.
+        # Refcounted (fleet-concurrency-safe) disable; restored after the
+        # merge, so at cluster scale the big analytic queries (where AQE
+        # earns its keep) are unaffected.
         _aqe_disable(self.spark)
         stamped = self._with_bucket(staging).cache()
         try:
@@ -3200,16 +3211,9 @@ class KeyedTable:
                 aggs.append(F.collect_set(
                     F.when(~isd, F.col(self.BUCKET_COL))).alias("dv_up_b"))
             if dedup:
-                # Distinct over a STRUCT of the keys, not the bare columns:
-                # count_distinct(*cols) skips rows where any key is NULL
-                # (SQL COUNT DISTINCT semantics), but merge_cdc supports
-                # NULL keys via null-safe <=> joins and the dedup window
-                # groups a NULL key like any other value — the struct count
-                # matches the window's group count exactly, so did_dedup
-                # and the post-dedup n_rows stay correct for NULL-keyed
-                # batches.
-                aggs.append(F.count_distinct(
-                    F.struct(*[F.col(k) for k in self.keys])).alias("uniq"))
+                # the dedup window's exact group count (NULL keys
+                # included) with no exchange on the keys
+                aggs.append(distinct_key_count(self.keys).alias("uniq"))
             agg_row = stamped.agg(*aggs).first()
             buckets = list(agg_row["buckets"])
             n_rows = int(agg_row["n_rows"])
@@ -3218,7 +3222,12 @@ class KeyedTable:
             did_dedup = dedup and n_rows != int(agg_row["uniq"])
             stg = stamped
             if did_dedup:
-                stg = deduplicate(stamped, self.keys, order=order)
+                # the window's key exchange, sized like the bucket write
+                # (a batch touching b buckets has at least b keys)
+                stg = deduplicate(
+                    stamped.repartition(self._batch_width(buckets),
+                                        *self.keys),
+                    self.keys, order=order)
                 n_rows = int(agg_row["uniq"])
             if self.tombstones:
                 merge_kwargs.setdefault("tombstones", True)
@@ -3890,6 +3899,14 @@ class KeyedTable:
         self._write_dv(keep)
         return len(buckets)
 
+    def _batch_width(self, buckets: Sequence[int]) -> int:
+        """Partition count for a merge shuffle: one task per touched
+        bucket, at most one per core.  Under a _bucket (or key) hash
+        each bucket still lands in exactly one task, so the bucket write
+        still makes exactly one file per bucket."""
+        return max(1, min(len(buckets),
+                          self.spark.sparkContext.defaultParallelism))
+
     def _commit_merge(self, out: DataFrame, buckets: Sequence[int],
                       has_deletes: bool) -> None:
         """Write the merged touched-bucket content.  Unversioned: dynamic
@@ -3910,8 +3927,9 @@ class KeyedTable:
                 # from an empty dir listing).  Running it here also
                 # populates the cache, so the write below reads cached
                 # partitions instead of rescanning the source.
-                kept = {r[0] for r in out.select(self.BUCKET_COL)
-                        .distinct().collect()}
+                # (collect_set: no exchange on _bucket, one final task)
+                kept = set(out.agg(F.collect_set(self.BUCKET_COL))
+                           .first()[0])
             else:
                 # no deletes -> every touched bucket retains at least its
                 # upserts; the manifest's kept set is just the touched
@@ -3922,9 +3940,10 @@ class KeyedTable:
             # the write but before a trailing flag would leave stale
             # unflagged bloom words over rewritten buckets
             self._mark_index_dirty(buckets)
+            n_parts = self._batch_width(buckets)
             if self.versioned:
                 epoch = self.latest_epoch() + 1
-                self._write_epoch(out, epoch)
+                self._write_epoch(out, epoch, num_partitions=n_parts)
                 entries = self._load_manifest()
                 entries.append({
                     "e": epoch, "op": "merge",
@@ -3939,7 +3958,7 @@ class KeyedTable:
             # Set per-write, NOT via session conf — under a session with
             # the default STATIC mode this write would silently wipe
             # every untouched bucket.
-            (out.repartition(self.BUCKET_COL)
+            (out.repartition(n_parts, self.BUCKET_COL)
              .write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy(self.BUCKET_COL)

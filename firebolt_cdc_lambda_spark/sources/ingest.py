@@ -13,10 +13,12 @@ Reference behaviors re-implemented:
 * ``ingestion_seq`` — the per-file row number capturing Parquet row order
   = binlog order, used as the final dedup tie-breaker
   (lambda/handler.py:521-527, rationale :1-10).  Spark has no
-  ``ROW_NUMBER() OVER ()``; a *file-local* row number is built from
-  ``input_file_name`` + ``monotonically_increasing_id`` (the id is
-  monotone within a partition and partitions of one file follow block
-  order, preserving row order per file).
+  ``ROW_NUMBER() OVER ()``; the Parquet reader's hidden
+  ``_metadata.row_index`` column is the row's exact 0-based position in
+  its file, so ``row_index + 1`` is the file-local 1-based numbering
+  itself — exact under any split of a file into scan partitions, and
+  computed in the scan with no exchange, so a staging batch keeps the
+  scan's partitioning (one partition for a small file).
 """
 
 from __future__ import annotations
@@ -24,7 +26,8 @@ from __future__ import annotations
 import re
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ordering import INGEST_SEQ_COL
@@ -50,29 +53,26 @@ def is_full_load_file(filename: str) -> bool:
     return filename.rsplit("/", 1)[-1].upper().startswith("LOAD")
 
 
-def with_ingestion_seq(df: DataFrame,
-                       assert_file_names: bool = False) -> DataFrame:
+def with_ingestion_seq(df: DataFrame) -> DataFrame:
     """Add the file-local ``ingestion_seq`` (1-based, per input file).
 
-    The monotonically_increasing_id ordering assumption (block order =
-    row order within one file) is load-bearing for the binlog-order
-    tie-breaker — and it silently degrades if ``input_file_name()``
-    comes back empty (a non-file-backed plan would collapse every row
-    into ONE window partition).  ``assert_file_names=True`` (the
-    streaming path sets it) turns that silent degradation into a loud
-    per-row ``raise_error`` guard on the partition key itself — zero
-    extra jobs, zero cost when names are present."""
-    name = F.input_file_name()
-    if assert_file_names:
-        name = F.when(
-            name == "",
-            F.raise_error(F.lit(
-                "ingestion_seq: input_file_name() is empty — the batch is "
-                "not file-backed, so the binlog-order tie-breaker would "
-                "silently degrade to a single window partition"))
-        ).otherwise(name)
-    w = Window.partitionBy(name).orderBy(F.monotonically_increasing_id())
-    return df.withColumn(INGEST_SEQ_COL, F.row_number().over(w))
+    ``df`` must be a Parquet file scan (projections and filters on top
+    are fine): the numbering is the reader's ``_metadata.row_index``.
+    A plan that is not file-backed has no row index, and the binlog-order
+    tie-breaker cannot be built for it — that raises here, naming
+    ``ingestion_seq``, instead of degrading silently.  Streaming file
+    sources expose ``_metadata`` on the ``readStream`` DataFrame but not
+    on a ``foreachBatch`` micro-batch, so streams stamp before
+    ``writeStream``."""
+    try:
+        return df.withColumn(
+            INGEST_SEQ_COL,
+            (F.col("_metadata.row_index") + 1).cast("int"))
+    except AnalysisException as exc:
+        raise ValueError(
+            "ingestion_seq: the batch is not a Parquet file scan, so it "
+            "has no _metadata.row_index to number its rows in file "
+            "order") from exc
 
 
 def read_cdc_files(

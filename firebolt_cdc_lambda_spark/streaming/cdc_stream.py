@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..pipeline import CdcPipeline
+from ..sources.ingest import with_ingestion_seq
 
 
 class CdcStream:
@@ -63,15 +64,8 @@ class CdcStream:
     def _foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
             return
-        # Parquet row order = binlog order within a file (the reference
-        # calls this CRITICAL, lambda/handler.py:521-527); stamp the
-        # file-local ingestion_seq so the dedup cascade keeps its final
-        # tie-breaker in streaming mode too (input_file_name() is still
-        # available inside foreachBatch).
-        from ..sources.ingest import with_ingestion_seq
-        self.pipeline.process_batch(
-            self.table, self.keys,
-            with_ingestion_seq(batch_df, assert_file_names=True))
+        # ingestion_seq is already stamped on the stream (see start)
+        self.pipeline.process_batch(self.table, self.keys, batch_df)
 
     def start(self, spark: SparkSession, available_now: bool = True):
         """Start the stream; ``available_now`` drains the backlog and
@@ -90,7 +84,13 @@ class CdcStream:
         )
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", str(self.max_files_per_trigger))
-        stream = reader.parquet(self.source_dir)
+        # Parquet row order = binlog order within a file (the reference
+        # calls this CRITICAL, lambda/handler.py:521-527): stamp the
+        # file-local ingestion_seq here, on the file source, because
+        # _metadata.row_index does not resolve on a foreachBatch
+        # micro-batch — so the dedup cascade keeps its final tie-breaker
+        # in streaming mode too.
+        stream = with_ingestion_seq(reader.parquet(self.source_dir))
         # pathGlobFilter matches leaf *file* names; when a "file" is a
         # directory of part files (Spark-written fixtures), the LOAD name is
         # one level up — so match the LOAD prefix only on the LAST one or

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.scd2 import Scd2Table
+from ..sources.ingest import with_ingestion_seq
 
 
 class Scd2Stream:
@@ -70,12 +71,11 @@ class Scd2Stream:
     def _foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
             return
-        from ..sources.ingest import with_ingestion_seq
         cols = [*self.table.keys, *self.table.order, *self.table.tracked]
         if self.table.op_col:
             cols.append(self.table.op_col)
-        batch = with_ingestion_seq(batch_df,
-                                   assert_file_names=True).select(*cols)
+        # ingestion_seq is already stamped on the stream (see start)
+        batch = batch_df.select(*cols)
         # has_data(), not a bare dir-exists check: a CRASHED first init
         # leaves the directory with only _temporary/ wreckage, and
         # routing that to apply() would wedge the stream on an
@@ -93,7 +93,9 @@ class Scd2Stream:
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger",
                                    str(self.max_files_per_trigger))
-        stream = reader.parquet(self.source_dir)
+        # stamped on the file source: _metadata.row_index does not
+        # resolve on a foreachBatch micro-batch
+        stream = with_ingestion_seq(reader.parquet(self.source_dir))
         # leaf-segment LOAD* exclusion — same rationale as cdc_stream.py
         stream = stream.where(
             ~F.input_file_name().rlike("/LOAD[^/]*(/[^/]+)?$"))

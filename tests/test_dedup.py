@@ -80,6 +80,26 @@ def test_needs_dedup_bypass(spark):
     assert deduplicate(clean, ["id"], check_bypass=True) is clean
 
 
+def test_needs_dedup_counts_null_key_as_one_group(spark):
+    """A NULL key is a group of its own, as in the dedup window: a
+    duplicate-free batch with a NULL key bypasses the window, and two
+    rows sharing the NULL key are still deduplicated."""
+    from pyspark.sql import types as T
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("v", T.StringType()),
+                           T.StructField("load_timestamp", T.TimestampType())])
+    clean = spark.createDataFrame(
+        [(None, "n", TS), (1, "a", TS), (2, "b", TS)], schema)
+    assert not needs_dedup(clean, ["id"])
+    assert deduplicate(clean, ["id"], check_bypass=True) is clean
+    dup = spark.createDataFrame(
+        [(None, "old", TS), (None, "new", TS2), (1, "a", TS)], schema)
+    assert needs_dedup(dup, ["id"])
+    rows = deduplicate(dup, ["id"], check_bypass=True).collect()
+    assert sorted((r["id"] is None, r["v"]) for r in rows) == [
+        (False, "a"), (True, "new")]
+
+
 def test_ordering_levels_conditional(spark):
     # only the columns present contribute levels (lambda/handler.py:374-399)
     df = make(spark, [Row(id=1, load_timestamp=TS)])

@@ -299,3 +299,96 @@ def test_clone_read_union_of_scans_no_exchange(spark, tmp_path):
     plan2 = executed(c.read().select("k", "v"))
     assert plan2.count("FileScan parquet") == 1, plan2
     assert "Exchange" not in plan2, plan2
+
+
+# -- per-file merge: every stage as wide as its input ---------------------
+
+def _write_cdc_file(path, n, key_offset=0):
+    """One small DMS-shaped CDC file, written by pyarrow in row order."""
+    import datetime as dt
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    ts = dt.datetime(2024, 1, 2)
+    pq.write_table(pa.table({
+        "id": pa.array([key_offset + i for i in range(n)], pa.int64()),
+        "v": [f"v{i}" for i in range(n)],
+        "Op": ["U"] * n,
+        "load_timestamp": pa.array([ts] * n, pa.timestamp("us")),
+    }), path)
+    return path
+
+
+def _capture(monkeypatch, cls, method, sink):
+    """Record the executed plan of every DataFrame that ``cls.method``
+    runs (a ``first()`` or a ``parquet()`` write) while patched."""
+    orig = getattr(cls, method)
+
+    def spy(self, *a, **kw):
+        out = orig(self, *a, **kw)
+        df = getattr(self, "_df", self)
+        sink.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+    monkeypatch.setattr(cls, method, spy)
+
+
+def test_read_cdc_files_one_file_no_exchange(spark, tmp_path):
+    """Staging keeps the scan's partitioning: ingestion_seq is the
+    Parquet row index, so stamping it shuffles nothing."""
+    from firebolt_cdc_lambda_spark.sources.ingest import read_cdc_files
+    f = _write_cdc_file(str(tmp_path / "a.parquet"), 30)
+    df = read_cdc_files(spark, f)
+    assert "Exchange" not in executed(df)
+    assert df.rdd.getNumPartitions() == 1
+
+
+def test_merge_fused_agg_no_hash_exchange(spark, tmp_path, monkeypatch):
+    """The merge's fused aggregation (touched buckets, row count,
+    dedup-bypass key count) on a one-file staging runs with no
+    hashpartitioning exchange: no window on the file name, no distinct
+    exchange on the keys."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from firebolt_cdc_lambda_spark.operators.merge import KeyedTable
+    from firebolt_cdc_lambda_spark.sources.ingest import read_cdc_files
+    kt = KeyedTable(spark, str(tmp_path / "t"), ["id"], num_buckets=16)
+    kt.init(spark.range(100).selectExpr("id", "'x' AS v"))
+    staging = read_cdc_files(
+        spark, _write_cdc_file(str(tmp_path / "a.parquet"), 30))
+    plans: list[str] = []
+    _capture(monkeypatch, DataFrame, "first", plans)
+    kt.merge_raw_batch(staging)
+    fused = [p for p in plans if "collect_set" in p and "_bucket" in p]
+    assert fused, plans
+    assert all("hashpartitioning" not in p for p in fused), fused[0]
+
+
+@pytest.mark.parametrize("versioned", [False, True])
+def test_commit_merge_shuffle_sized_to_touched_buckets(
+        spark, tmp_path, monkeypatch, versioned):
+    """The bucket write shuffles to min(touched buckets,
+    defaultParallelism) partitions, not spark.sql.shuffle.partitions,
+    and still writes exactly one file per touched bucket."""
+    import re
+    from pyspark.sql.readwriter import DataFrameWriter
+    from firebolt_cdc_lambda_spark.operators.merge import KeyedTable
+    from firebolt_cdc_lambda_spark.sources.ingest import read_cdc_files
+    cores = spark.sparkContext.defaultParallelism
+    kt = KeyedTable(spark, str(tmp_path / "t"), ["id"], num_buckets=64,
+                    versioned=versioned)
+    kt.init(spark.range(1000).selectExpr("id", "'x' AS v"))
+    for n_keys, name in ((2, "small"), (300, "wide")):
+        staging = read_cdc_files(spark, _write_cdc_file(
+            str(tmp_path / f"{name}.parquet"), n_keys, key_offset=7))
+        touched = len({r[0] for r in kt._with_bucket(staging)
+                       .select("_bucket").collect()})
+        plans: list[str] = []
+        _capture(monkeypatch, DataFrameWriter, "parquet", plans)
+        assert kt.merge_raw_batch(staging)[0] == touched
+        monkeypatch.undo()
+        widths = {int(m) for p in plans for m in re.findall(
+            r"hashpartitioning\(_bucket#\d+L?, (\d+)\)", p)}
+        assert widths == {min(touched, cores)}, (touched, widths)
+    files = [f for f in (tmp_path / "t").rglob("*.parquet")]
+    per_dir: dict = {}
+    for f in files:
+        per_dir[f.parent] = per_dir.get(f.parent, 0) + 1
+    assert max(per_dir.values()) == 1

@@ -104,16 +104,15 @@ def test_stream_skips_load_files(spark, env):
 
 
 def test_ingestion_seq_guard_catches_non_file_batch(spark):
-    """The streaming path stamps ingestion_seq with assert_file_names=True:
-    a batch whose plan is not file-backed (empty input_file_name) must
-    fail loudly instead of silently collapsing the binlog-order
-    tie-breaker into one window partition."""
+    """ingestion_seq is the Parquet row index: a batch whose plan is not
+    file-backed has none, and must fail loudly instead of silently
+    losing the binlog-order tie-breaker."""
     from firebolt_cdc_lambda_spark.sources.ingest import with_ingestion_seq
 
     mem = spark.range(5)
     with pytest.raises(Exception, match="ingestion_seq"):
-        with_ingestion_seq(mem, assert_file_names=True).collect()
+        with_ingestion_seq(mem).collect()
     # file-backed batches pass the guard untouched
     df = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
-    rows = with_ingestion_seq(df, assert_file_names=True).collect()
+    rows = with_ingestion_seq(df).collect()
     assert sorted(r["ingestion_seq"] for r in rows) == list(range(1, 26))
