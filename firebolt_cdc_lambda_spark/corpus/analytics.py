@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..session import conf_scope
 from .base import Query, davg, dec, dsum, load_table, sql_davg, sql_dsum
 
 _Q1_CUTOFF = "1998-09-02"
@@ -1650,25 +1651,15 @@ _WM_WIN_US = 3_600_000_000            # 1-hour tumbling windows
 _WM_DELAY_US = 48 * 3_600_000_000     # 48-hour watermark delay
 
 
-import contextlib
-
-
-@contextlib.contextmanager
-def _stream_shuffle_partitions(spark, n=8):
-    """Pin spark.sql.shuffle.partitions for a streaming run, restore
-    after.  The state-store partition count is frozen at stream start
-    from this conf; under a plain driver session (200) every
-    micro-batch of a corpus-scale stream pays 200 state-store task
-    launches for a few thousand rows.  Output is partition-count-
-    independent (the stream oracles hash-match under any setting);
-    this is purely gate-cost hygiene.  Fresh checkpoints per query
-    call mean no cross-run state-partition mismatch."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+#: Pins spark.sql.shuffle.partitions for a streaming run.  The
+#: state-store partition count is frozen at stream start from this conf;
+#: under a plain driver session (200) every micro-batch of a
+#: corpus-scale stream pays 200 state-store task launches for a few
+#: thousand rows.  Output is partition-count-independent (the stream
+#: oracles hash-match under any setting); this is purely gate-cost
+#: hygiene.  Fresh checkpoints per query call mean no cross-run
+#: state-partition mismatch.
+_STREAM_SHUFFLE = {"spark.sql.shuffle.partitions": "8"}
 
 
 def _write_stream_batches(split, src, n_batches, cols):
@@ -1711,7 +1702,7 @@ def events_stream_watermark(spark, sf):
                    F.col("n_events").cast("bigint").alias("n_events"),
                    "total_value"))
     sink = os.path.join(tmp, "sink")
-    with _stream_shuffle_partitions(spark):
+    with conf_scope(spark, **_STREAM_SHUFFLE):
         q = (agg.writeStream.outputMode("append").format("parquet")
              .option("path", sink)
              .option("checkpointLocation", os.path.join(tmp, "ckpt"))
@@ -1781,7 +1772,7 @@ def events_stream_sliding(spark, sf):
                    F.col("n_events").cast("bigint").alias("n_events"),
                    "total_value"))
     sink = os.path.join(tmp, "sink")
-    with _stream_shuffle_partitions(spark):
+    with conf_scope(spark, **_STREAM_SHUFFLE):
         q = (agg.writeStream.outputMode("append").format("parquet")
              .option("path", sink)
              .option("checkpointLocation", os.path.join(tmp, "ckpt"))
@@ -1880,7 +1871,7 @@ def events_stream_dedup(spark, sf):
            .dropDuplicatesWithinWatermark(["event_id"])
            .select("event_id", F.unix_micros("ts").alias("tus"), "value"))
     sink = os.path.join(tmp, "sink")
-    with _stream_shuffle_partitions(spark):
+    with conf_scope(spark, **_STREAM_SHUFFLE):
         q = (out.writeStream.outputMode("append").format("parquet")
              .option("path", sink)
              .option("checkpointLocation", os.path.join(tmp, "ckpt"))
@@ -1983,7 +1974,7 @@ def events_stream_sessions(spark, sf):
                    F.unix_micros(F.col("s.end")).alias("session_end_us"),
                    F.col("n_events").cast("bigint").alias("n_events")))
     sink = os.path.join(tmp, "sink")
-    with _stream_shuffle_partitions(spark):
+    with conf_scope(spark, **_STREAM_SHUFFLE):
         q = (agg.writeStream.outputMode("append").format("parquet")
              .option("path", sink)
              .option("checkpointLocation", os.path.join(tmp, "ckpt"))
@@ -2057,7 +2048,7 @@ def cdc_stream_changelog(spark, sf):
               .parquet(src))
     chlog = stateful_last_value(stream, key="user_id")
     name = "chlog_" + os.path.basename(tmp).split("_")[-1]
-    with _stream_shuffle_partitions(spark):
+    with conf_scope(spark, **_STREAM_SHUFFLE):
         q = (chlog.writeStream.outputMode("update").format("memory")
              .queryName(name)
              .option("checkpointLocation", os.path.join(tmp, "ckpt"))
@@ -2225,7 +2216,7 @@ def _run_stream_join(spark, sf, how):
                  F.unix_micros("v_ts").alias("view_us"),
                  F.unix_micros("p_ts").alias("purchase_us"), "value"))
     sink = os.path.join(tmp, "sink")
-    with _stream_shuffle_partitions(spark):
+    with conf_scope(spark, **_STREAM_SHUFFLE):
         q = (j.writeStream.outputMode("append").format("parquet")
              .option("path", sink)
              .option("checkpointLocation", os.path.join(tmp, "ckpt"))
@@ -2437,7 +2428,7 @@ def events_stream_static_enrich(spark, sf):
                    F.col("n_events").cast("bigint").alias("n_events"),
                    "total_value"))
     sink = os.path.join(tmp, "sink")
-    with _stream_shuffle_partitions(spark):
+    with conf_scope(spark, **_STREAM_SHUFFLE):
         q = (agg.writeStream.outputMode("append").format("parquet")
              .option("path", sink)
              .option("checkpointLocation", os.path.join(tmp, "ckpt"))

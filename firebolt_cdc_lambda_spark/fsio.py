@@ -9,11 +9,17 @@ one place that touches the JVM FileSystem API for that.
 
 Driver-side by design: the documents are tiny (KBs) and read/written
 once per batch, never per row.
+
+The same goes for the schema pins below: the schemas of parquet
+datasets this process reads repeatedly (corpus tables, index stores,
+zone maps, the delete-vector sidecar), kept so that a read passes the
+schema explicitly instead of paying a footer-inference job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def fs_and_path(spark: SparkSession, p: str):
@@ -71,3 +77,37 @@ def list_dirs(spark: SparkSession, p: str) -> list[str]:
         return []
     return [st.getPath().getName() for st in fs.listStatus(path)
             if st.isDirectory()]
+
+
+#: Process-wide schema pins, keyed by dataset root path.  Every
+#: in-process writer of a pinned root calls ``pin`` with the schema it
+#: just wrote, or ``unpin`` when a rebuild may change the layout, so a
+#: pin is invalidated per path — every handle on that path sees it.
+_PINS: dict[str, StructType] = {}
+
+
+def pin(root: str, schema: StructType) -> None:
+    """Record ``schema`` as the layout of the parquet dataset at ``root``."""
+    _PINS[root] = schema
+
+
+def unpin(root: str) -> None:
+    """Forget ``root``'s layout; the next ``read_pinned`` infers it."""
+    _PINS.pop(root, None)
+
+
+def read_pinned(spark: SparkSession, root: str, *paths: str,
+                **options: str) -> DataFrame:
+    """``spark.read.parquet`` of ``paths`` (default: ``root`` itself,
+    else globs or sub-dirs under it) with ``root``'s pinned schema.  An
+    unpinned root infers from the footers once and pins what it found.
+    Errors of the read itself (absent path, nothing to infer from) reach
+    the caller, which decides what an absent dataset means."""
+    schema = _PINS.get(root)
+    reader = spark.read.options(**options)
+    if schema is not None:
+        reader = reader.schema(schema)
+    df = reader.parquet(*(paths or (root,)))
+    if schema is None:
+        _PINS[root] = df.schema
+    return df

@@ -54,6 +54,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import AQE_OFF, conf_scope
 from .merge import KeyedTable
 from .sidecar_index import SidecarIndex
 
@@ -300,18 +301,13 @@ class BloomIndex(SidecarIndex):
                               F.expr(f"shiftleft(CAST(1 AS BIGINT), "
                                      f"CAST(p % {_WORD_BITS} AS INT))")
                               .alias("mask")))
-        try:
-            # schema is pinned (the words layout is fixed at build time:
-            # (w, bits) data columns + the b partition dir) — no
-            # footer-inference job per probe
-            from pyspark.sql import types as T
-            wschema = T.StructType([
-                T.StructField("w", T.IntegerType()),
-                T.StructField("bits", T.LongType()),
-                T.StructField("b", T.IntegerType())])
-            words = self.spark.read.schema(wschema).parquet(self.words_path)
-        except Exception:
-            return None        # words dataset missing/unreadable: fail open
+        # schema is pinned (the words layout is fixed at build time:
+        # (w, bits) data columns + the b partition dir) — no
+        # footer-inference job per probe
+        wschema = T.StructType([
+            T.StructField("w", T.IntegerType()),
+            T.StructField("bits", T.LongType()),
+            T.StructField("b", T.IntegerType())])
         # ONE exchange, ONE job: the join emits at most one row per
         # (b, vid, j) — words are unique per (b, w) and probe_rows per
         # (vid, j) — so count(1) == the distinct-j count the k-bits test
@@ -321,19 +317,22 @@ class BloomIndex(SidecarIndex):
         # physical choice is pinned (broadcast probe, metadata-sized
         # agg) and per-stage re-planning turned this single action into
         # FIVE scheduled jobs (measured round 13).
-        from .merge import _aqe_disable, _aqe_restore
-        hits = (words.join(F.broadcast(probe_rows), "w")
-                .where(F.col("bits").bitwiseAND(F.col("mask"))
-                       == F.col("mask"))
-                .groupBy("b", "vid")
-                .agg(F.count(F.lit(1)).alias("nbits"))
-                .where(F.col("nbits") == self.k)
-                .select("b"))
-        _aqe_disable(self.spark)
         try:
-            matched = {int(r[0]) for r in hits.collect()}
-        finally:
-            _aqe_restore(self.spark)
+            words = self.spark.read.schema(wschema).parquet(self.words_path)
+            hits = (words.join(F.broadcast(probe_rows), "w")
+                    .where(F.col("bits").bitwiseAND(F.col("mask"))
+                           == F.col("mask"))
+                    .groupBy("b", "vid")
+                    .agg(F.count(F.lit(1)).alias("nbits"))
+                    .where(F.col("nbits") == self.k)
+                    .select("b"))
+            with conf_scope(self.spark, **AQE_OFF):
+                matched = {int(r[0]) for r in hits.collect()}
+        except Exception:
+            # words dataset missing, unreadable, or not the pinned
+            # layout (the collect is where a file's types are checked):
+            # fail open
+            return None
         dirty = {int(b) for b in side.get("dirty", [])}
         return sorted(matched | dirty)
 

@@ -31,6 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import fsio
+from ..session import AQE_OFF, conf_scope
+
 _QUANT = "transform({col}, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
 _DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         "CAST(0 AS BIGINT), (acc, v) -> acc + v)")
@@ -57,20 +60,12 @@ class IvfIndex:
         self.path = path.rstrip("/")
         self.n_centroids = n_centroids
         self.nprobe = nprobe
-        # per-store schema memo (cells/centroids layouts are fixed at
-        # build time): later reads pass the schema explicitly instead of
-        # paying a footer-inference job per probe (round 13, guide §1/§6)
-        self._store_schema: dict[str, object] = {}
 
     def _read_store(self, store: str) -> DataFrame:
-        cached = self._store_schema.get(store)
-        reader = self.spark.read
-        if cached is not None:
-            reader = reader.schema(cached)
-        df = reader.parquet(f"{self.path}/{store}")
-        if cached is None:
-            self._store_schema[store] = df.schema
-        return df
+        # schema pin (cells/centroids layouts are fixed at build
+        # time): later reads pass the schema explicitly instead of
+        # paying a footer-inference job per probe (round 13, guide §1/§6)
+        return fsio.read_pinned(self.spark, f"{self.path}/{store}")
 
     # -- build ------------------------------------------------------------
     def build(self, vectors: DataFrame, id_col: str = "vec_id",
@@ -98,11 +93,15 @@ class IvfIndex:
                      F.struct((-F.col("ccos")).alias("nc"),
                               F.col("cent_id").alias("cid"))).alias("m"))
                  .select("vec_id", "m.cell", "m.qv", "m.norm2"))
+        # STATIC overwrite: a rebuild must drop the old cells, not only
+        # replace the ones the new build writes again
         (cells.write.mode("overwrite")
+         .option("partitionOverwriteMode", "static")
          .partitionBy("cell").parquet(f"{self.path}/cells"))
         (cents.write.mode("overwrite").parquet(f"{self.path}/centroids"))
-        # a rebuild may change the id/vector types; drop the schema memo
-        self._store_schema.clear()
+        # a rebuild may change the id/vector types: drop the pins
+        fsio.unpin(f"{self.path}/cells")
+        fsio.unpin(f"{self.path}/centroids")
 
     # -- training ---------------------------------------------------------
     def train_centroids(self, vectors: DataFrame, id_col: str = "vec_id",
@@ -236,15 +235,11 @@ class IvfIndex:
         # collect is metadata-sized (≤ n_centroids rows), so per-stage
         # re-planning only multiplies scheduled jobs (round 13, same
         # rationale as the bloom/LSH probes)
-        from .merge import _aqe_disable, _aqe_restore
-        _aqe_disable(self.spark)
-        try:
+        with conf_scope(self.spark, **AQE_OFF):
             probes = probes.localCheckpoint(eager=True)
             # ≤ n_centroids values — bounded by K, not by data
             cell_list = [r[0] for r in
                          probes.select("probe_cell").distinct().collect()]
-        finally:
-            _aqe_restore(self.spark)
         idx = (self._read_store("cells")
                .where(F.col("cell").isin(cell_list)))
         cos = _cosine("qq", "qv", "qn", "norm2")

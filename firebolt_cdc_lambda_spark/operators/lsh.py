@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsio
 from ..functions.texthash import (
     CLEAN_SPARK,
     JACCARD_THRESHOLD,
@@ -49,6 +50,7 @@ from ..functions.texthash import (
     minhash_expr,
     shingle_array_expr,
 )
+from ..session import AQE_OFF, conf_scope
 
 
 class LshIndex:
@@ -60,13 +62,6 @@ class LshIndex:
         self.path = path.rstrip("/")
         self.n_shards = n_shards
         self.threshold = threshold
-        # per-store schema memo: both stores' schemas are fixed at build
-        # time (sig: doc_id/hs, buckets: doc_id/band/bucket, + the shard
-        # partition dir; append keeps them), so after the first probe the
-        # pruned shard reads pass the schema explicitly instead of paying
-        # a footer-inference job per probe (round 13, guide §1/§6 — same
-        # pin as KeyedTable's sidecar and BloomIndex's words read)
-        self._store_schema: dict[str, object] = {}
 
     # -- fingerprinting ---------------------------------------------------
     def _fingerprints(self, docs: DataFrame, id_col: str,
@@ -134,17 +129,21 @@ class LshIndex:
         finally:
             fused.unpersist()
         if mode == "overwrite":
-            # a rebuild may change the doc_id type; drop the schema memo
-            self._store_schema.clear()
+            # a rebuild may change the doc_id type: drop the pins
+            fsio.unpin(f"{self.path}/sig")
+            fsio.unpin(f"{self.path}/buckets")
 
     def _write_fused(self, fused: DataFrame, mode: str) -> None:
+        # STATIC overwrite: a rebuild must drop every old shard, not
+        # only the shards its documents hash to (ignored on append)
         (self._sig_of(fused)
          .withColumn("shard", self._doc_shard("doc_id"))
          .repartition("shard")
-         .write.mode(mode).partitionBy("shard").parquet(f"{self.path}/sig"))
+         .write.mode(mode).option("partitionOverwriteMode", "static")
+         .partitionBy("shard").parquet(f"{self.path}/sig"))
         (self._buckets_of(fused).repartition("shard")
-         .write.mode(mode).partitionBy("shard")
-         .parquet(f"{self.path}/buckets"))
+         .write.mode(mode).option("partitionOverwriteMode", "static")
+         .partitionBy("shard").parquet(f"{self.path}/buckets"))
 
     def build(self, docs: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> None:
@@ -181,16 +180,16 @@ class LshIndex:
             return None
         from pyspark.errors import AnalysisException
         glob = ",".join(str(s) for s in sorted(shards))
+        # schema pin: both stores' layouts are fixed at build time (sig:
+        # doc_id/hs, buckets: doc_id/band/bucket, + the shard partition
+        # dir; append keeps them), so after the first probe the pruned
+        # shard reads pass the schema explicitly instead of paying a
+        # footer-inference job per probe (round 13, guide §1/§6)
+        root = f"{self.path}/{store}"
         try:
-            reader = self.spark.read.option("basePath",
-                                            f"{self.path}/{store}")
-            cached = self._store_schema.get(store)
-            if cached is not None:
-                reader = reader.schema(cached)
-            df = reader.parquet(f"{self.path}/{store}/shard={{{glob}}}")
-            if cached is None:
-                self._store_schema[store] = df.schema
-            return df
+            return fsio.read_pinned(self.spark, root,
+                                    f"{root}/shard={{{glob}}}",
+                                    basePath=root)
         except AnalysisException as exc:
             # PATH_NOT_FOUND: store absent or no probed shard written yet.
             # UNABLE_TO_INFER_SCHEMA: shard dirs exist but hold no files
@@ -211,13 +210,9 @@ class LshIndex:
         # checkpoint's physical plan is a map-only fingerprint projection
         # with nothing for per-stage re-planning to improve (round 13,
         # same rationale as the merge path / bloom probe).
-        from .merge import _aqe_disable, _aqe_restore
-        _aqe_disable(self.spark)
-        try:
+        with conf_scope(self.spark, **AQE_OFF):
             fused = (self._fingerprints(docs, id_col, text_col)
                      .localCheckpoint(eager=True))
-        finally:
-            _aqe_restore(self.spark)
         return self.probe_fused(fused, threshold)
 
     def probe_fused(self, fused: DataFrame,
@@ -237,9 +232,7 @@ class LshIndex:
         # adaptive per-stage re-planning only multiplies the scheduled
         # job count (measured round 13: the bloom probe's identical
         # shape went 5 jobs -> 1 with the same pause)
-        from .merge import _aqe_disable, _aqe_restore
-        _aqe_disable(self.spark)
-        try:
+        with conf_scope(self.spark, **AQE_OFF):
             shard_rows = buckets.select("shard").distinct().collect()
             postings = self._read_shards(
                 "buckets", [int(r[0]) for r in shard_rows])
@@ -253,8 +246,6 @@ class LshIndex:
                     .withColumn("cshard", self._doc_shard("corpus_doc_id"))
                     .localCheckpoint(eager=True))
             cshard_rows = cand.select("cshard").distinct().collect()
-        finally:
-            _aqe_restore(self.spark)
         corpus_sig = self._read_shards(
             "sig", [int(r[0]) for r in cshard_rows])
         if corpus_sig is None:

@@ -49,58 +49,17 @@ big side never shuffles.
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Sequence
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsio
+from ..session import AQE_OFF, conf_scope
 from .ordering import CDC_META_COLS, OP_COL
 
 DEFAULT_DELETE_VALUES = ("D",)
-
-# AQE is disabled for the merge's jobs (see _merge_impl) by toggling the
-# SESSION-global conf — under fleet mode, many tables' foreachBatch merges
-# run concurrently on one shared session, and naive set/restore races:
-# merge B can capture "false" (set by in-flight merge A) as its restore
-# value and leave AQE off for the whole session.  Refcount instead: first
-# merge in captures the true prior value and disables; last merge out
-# restores it.  (Analytic queries running concurrently with a merge lose
-# AQE for that window — a bounded perf effect, never a correctness one.)
-#
-# Per-query scoping via spark.newSession() (an isolated SQLConf on the
-# shared context) was considered and REJECTED: the staging DataFrame is
-# created by the CALLER's session — under streaming it is the
-# foreachBatch micro-batch DF, whose plan is bound to that session and
-# its state — and re-binding or re-materializing it on a clone session
-# is either unsupported (streaming sources) or costs an extra write.
-# Revisit only if Spark grows true per-query conf scoping.
-_AQE_LOCK = threading.Lock()
-_AQE_STATE: dict[int, list] = {}   # id(session) -> [depth, prior_value]
-
-
-def _aqe_disable(spark: SparkSession) -> None:
-    with _AQE_LOCK:
-        st = _AQE_STATE.get(id(spark))
-        if st is None:
-            prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            _AQE_STATE[id(spark)] = [1, prior]
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        else:
-            st[0] += 1
-
-
-def _aqe_restore(spark: SparkSession) -> None:
-    with _AQE_LOCK:
-        st = _AQE_STATE.get(id(spark))
-        if st is None:
-            return
-        st[0] -= 1
-        if st[0] <= 0:
-            spark.conf.set("spark.sql.adaptive.enabled", st[1])
-            del _AQE_STATE[id(spark)]
-
 
 class MergeKeyError(ValueError):
     """A primary-key column cannot participate in the merge (e.g. dropped
@@ -716,8 +675,6 @@ class KeyedTable:
         whose cost contract is ∝ small files (review finding, round 9);
         zone maps reference files by NAME, so they must go dirty."""
         import json
-
-        from .. import fsio
         meta = self._load_meta()
         sidecars = (
             ([f"{self.path}__bloom_{c}.json"
@@ -1269,19 +1226,13 @@ class KeyedTable:
         the backup IS the committed previous state).  A missing sidecar
         reading as "no deletes" would silently resurrect every deleted
         row (advice finding, round 7)."""
-        # schema memo: the sidecar layout (keys + DV_VERSION_COL) is
+        # schema pin: the sidecar layout (keys + DV_VERSION_COL) is
         # fixed between writes and every write goes through _write_dv,
-        # which refreshes the memo from the content it writes — so a
-        # warm handle reads entries without a footer-inference job per
-        # merge (round 13, guide §1/§6)
-        cached = getattr(self, "_dv_schema", None)
+        # which re-pins it from the content it writes — so reads skip
+        # the footer-inference job per merge (round 13, guide §1/§6)
         for p in (self._dv_path, f"{self._dv_path}__old"):
             try:
-                if cached is not None:
-                    return self.spark.read.schema(cached).parquet(p)
-                df = self.spark.read.parquet(p)
-                self._dv_schema = df.schema
-                return df
+                return fsio.read_pinned(self.spark, self._dv_path, p)
             except AnalysisException as exc:
                 if exc.getErrorClass() in ("PATH_NOT_FOUND",
                                            "UNABLE_TO_INFER_SCHEMA"):
@@ -1326,7 +1277,7 @@ class KeyedTable:
         # crash window with only the stale backup left, and _read_dv
         # would fall back to it — resurrecting cleared DELETE entries
         if dv is None:
-            self._dv_schema = None
+            fsio.unpin(self._dv_path)
             if fs.exists(p_bak):
                 fs.delete(p_bak, True)
             if fs.exists(p):
@@ -1334,14 +1285,14 @@ class KeyedTable:
             return
         pinned = dv.localCheckpoint(eager=True)
         if pinned.limit(1).isEmpty():
-            self._dv_schema = None
+            fsio.unpin(self._dv_path)
             if fs.exists(p_bak):
                 fs.delete(p_bak, True)
             if fs.exists(p):
                 fs.delete(p, True)
             return
         # the content being written defines the next reads' schema
-        self._dv_schema = pinned.schema
+        fsio.pin(self._dv_path, pinned.schema)
         tmp = f"{self._dv_path}__tmp"
         pinned.coalesce(1).write.mode("overwrite").parquet(tmp)
         p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
@@ -1702,13 +1653,10 @@ class KeyedTable:
             # bloom-probe rationale, round 13): the distinct is over a
             # lookup-sized key set, and per-stage re-planning turns the
             # single action into one scheduled job per query stage
-            _aqe_disable(self.spark)
-            try:
+            with conf_scope(self.spark, **AQE_OFF):
                 buckets = [int(r[0]) for r in
                            kdf.select(bcol.alias(self.BUCKET_COL))
                            .distinct().collect()]
-            finally:
-                _aqe_restore(self.spark)
         df = self._hide_tombstones(
             self._read_raw(buckets=buckets, as_of=as_of)
             .drop(self.BUCKET_COL),
@@ -2115,8 +2063,6 @@ class KeyedTable:
         entry followed by its own purge).  Driver-side JSON read —
         never a Spark job."""
         import json as _json
-
-        from .. import fsio
         text = fsio.read_text(self.spark, f"{clone_path}/_epochs.json")
         if text is None:
             return None
@@ -2847,8 +2793,6 @@ class KeyedTable:
             # signal): dirty buckets accumulate until the maintenance
             # cadence pays them down, exactly like dv_bytes/dead_ratio
             import json as _json
-
-            from .. import fsio
             report["index_columns"] = (
                 [f"bloom:{c}" for c in bloom_cols]
                 + [f"stats:{c}" for c in stats_cols])
@@ -3186,89 +3130,88 @@ class KeyedTable:
         # Refcounted (fleet-concurrency-safe) disable; restored after the
         # merge, so at cluster scale the big analytic queries (where AQE
         # earns its keep) are unaffected.
-        _aqe_disable(self.spark)
-        stamped = self._with_bucket(staging).cache()
-        try:
-            # ONE aggregation job yields the touched-bucket list, the
-            # has-deletes flag, the batch row count, and (for raw batches)
-            # the distinct-key count driving the dedup bypass (saves
-            # per-batch jobs on the hot path).
-            op_col = merge_kwargs.get("op_col", OP_COL)
-            delete_values = list(merge_kwargs.get("delete_values", DEFAULT_DELETE_VALUES))
-            del_flag = (F.max(F.col(op_col).isin(delete_values).cast("int"))
-                        if op_col in staging.columns else F.lit(0))
-            aggs = [F.collect_set(self.BUCKET_COL).alias("buckets"),
-                    del_flag.alias("has_del"),
-                    F.count(F.lit(1)).alias("n_rows")]
-            if self.delete_vectors and op_col in staging.columns:
-                # DV mode: the delete/upsert legs each need THEIR rows'
-                # bucket sets — ride the same one aggregation instead of
-                # two later distinct+collect jobs (round 13; the shared
-                # _is_delete_sql keeps the split identical to the legs')
-                isd = F.expr(_is_delete_sql(op_col, delete_values))
-                aggs.append(F.collect_set(
-                    F.when(isd, F.col(self.BUCKET_COL))).alias("dv_del_b"))
-                aggs.append(F.collect_set(
-                    F.when(~isd, F.col(self.BUCKET_COL))).alias("dv_up_b"))
-            if dedup:
-                # the dedup window's exact group count (NULL keys
-                # included) with no exchange on the keys
-                aggs.append(distinct_key_count(self.keys).alias("uniq"))
-            agg_row = stamped.agg(*aggs).first()
-            buckets = list(agg_row["buckets"])
-            n_rows = int(agg_row["n_rows"])
-            if not buckets:
-                return 0, 0, False
-            did_dedup = dedup and n_rows != int(agg_row["uniq"])
-            stg = stamped
-            if did_dedup:
-                # the window's key exchange, sized like the bucket write
-                # (a batch touching b buckets has at least b keys)
-                stg = deduplicate(
-                    stamped.repartition(self._batch_width(buckets),
-                                        *self.keys),
-                    self.keys, order=order)
-                n_rows = int(agg_row["uniq"])
-            if self.tombstones:
-                merge_kwargs.setdefault("tombstones", True)
-            if self.delta_upserts:
-                self._merge_delta(stg, merge_kwargs, buckets,
-                                  has_del=bool(agg_row["has_del"]))
-                return 0, n_rows, did_dedup
-            if self.delete_vectors:
-                # bucket-set hints from the fused agg — valid only when
-                # the batch was NOT deduplicated (dedup can flip a key's
-                # surviving row between the delete and upsert legs, so
-                # the pre-dedup sets would over-read; the legs then fall
-                # back to their own exact computation)
-                dv_del_b = dv_up_b = None
-                if not did_dedup:
-                    if "dv_del_b" in agg_row.asDict():
-                        dv_del_b = sorted(int(b)
-                                          for b in agg_row["dv_del_b"])
-                        dv_up_b = sorted(int(b) for b in agg_row["dv_up_b"])
-                    else:
-                        # no op column: every row is an upsert
-                        dv_del_b = []
-                        dv_up_b = sorted(int(b) for b in buckets)
-                n_b = self._merge_dv(stg, merge_kwargs,
-                                     has_del=bool(agg_row["has_del"]),
-                                     del_buckets=dv_del_b,
-                                     up_buckets_pregate=dv_up_b)
-                return n_b, n_rows, did_dedup
-            # delete-free batches (the common CDC case) skip the
-            # emptied-bucket bookkeeping below — one less job + no cache.
-            # Tombstone mode NEVER empties a bucket (deletes become marker
-            # rows), so it skips the bookkeeping entirely.
-            has_deletes = bool(agg_row["has_del"]) and not self.tombstones
-            current = self._read_raw(buckets=buckets).drop(self.BUCKET_COL)
-            merged = merge_cdc(current, stg.drop(self.BUCKET_COL), self.keys, **merge_kwargs)
-            out = self._with_bucket(merged)
-            self._commit_merge(out, buckets, has_deletes)
-            return len(buckets), n_rows, did_dedup
-        finally:
-            stamped.unpersist()
-            _aqe_restore(self.spark)
+        with conf_scope(self.spark, **AQE_OFF):
+            stamped = self._with_bucket(staging).cache()
+            try:
+                # ONE aggregation job yields the touched-bucket list, the
+                # has-deletes flag, the batch row count, and (for raw batches)
+                # the distinct-key count driving the dedup bypass (saves
+                # per-batch jobs on the hot path).
+                op_col = merge_kwargs.get("op_col", OP_COL)
+                delete_values = list(merge_kwargs.get("delete_values", DEFAULT_DELETE_VALUES))
+                del_flag = (F.max(F.col(op_col).isin(delete_values).cast("int"))
+                            if op_col in staging.columns else F.lit(0))
+                aggs = [F.collect_set(self.BUCKET_COL).alias("buckets"),
+                        del_flag.alias("has_del"),
+                        F.count(F.lit(1)).alias("n_rows")]
+                if self.delete_vectors and op_col in staging.columns:
+                    # DV mode: the delete/upsert legs each need THEIR rows'
+                    # bucket sets — ride the same one aggregation instead of
+                    # two later distinct+collect jobs (round 13; the shared
+                    # _is_delete_sql keeps the split identical to the legs')
+                    isd = F.expr(_is_delete_sql(op_col, delete_values))
+                    aggs.append(F.collect_set(
+                        F.when(isd, F.col(self.BUCKET_COL))).alias("dv_del_b"))
+                    aggs.append(F.collect_set(
+                        F.when(~isd, F.col(self.BUCKET_COL))).alias("dv_up_b"))
+                if dedup:
+                    # the dedup window's exact group count (NULL keys
+                    # included) with no exchange on the keys
+                    aggs.append(distinct_key_count(self.keys).alias("uniq"))
+                agg_row = stamped.agg(*aggs).first()
+                buckets = list(agg_row["buckets"])
+                n_rows = int(agg_row["n_rows"])
+                if not buckets:
+                    return 0, 0, False
+                did_dedup = dedup and n_rows != int(agg_row["uniq"])
+                stg = stamped
+                if did_dedup:
+                    # the window's key exchange, sized like the bucket write
+                    # (a batch touching b buckets has at least b keys)
+                    stg = deduplicate(
+                        stamped.repartition(self._batch_width(buckets),
+                                            *self.keys),
+                        self.keys, order=order)
+                    n_rows = int(agg_row["uniq"])
+                if self.tombstones:
+                    merge_kwargs.setdefault("tombstones", True)
+                if self.delta_upserts:
+                    self._merge_delta(stg, merge_kwargs, buckets,
+                                      has_del=bool(agg_row["has_del"]))
+                    return 0, n_rows, did_dedup
+                if self.delete_vectors:
+                    # bucket-set hints from the fused agg — valid only when
+                    # the batch was NOT deduplicated (dedup can flip a key's
+                    # surviving row between the delete and upsert legs, so
+                    # the pre-dedup sets would over-read; the legs then fall
+                    # back to their own exact computation)
+                    dv_del_b = dv_up_b = None
+                    if not did_dedup:
+                        if "dv_del_b" in agg_row.asDict():
+                            dv_del_b = sorted(int(b)
+                                              for b in agg_row["dv_del_b"])
+                            dv_up_b = sorted(int(b) for b in agg_row["dv_up_b"])
+                        else:
+                            # no op column: every row is an upsert
+                            dv_del_b = []
+                            dv_up_b = sorted(int(b) for b in buckets)
+                    n_b = self._merge_dv(stg, merge_kwargs,
+                                         has_del=bool(agg_row["has_del"]),
+                                         del_buckets=dv_del_b,
+                                         up_buckets_pregate=dv_up_b)
+                    return n_b, n_rows, did_dedup
+                # delete-free batches (the common CDC case) skip the
+                # emptied-bucket bookkeeping below — one less job + no cache.
+                # Tombstone mode NEVER empties a bucket (deletes become marker
+                # rows), so it skips the bookkeeping entirely.
+                has_deletes = bool(agg_row["has_del"]) and not self.tombstones
+                current = self._read_raw(buckets=buckets).drop(self.BUCKET_COL)
+                merged = merge_cdc(current, stg.drop(self.BUCKET_COL), self.keys, **merge_kwargs)
+                out = self._with_bucket(merged)
+                self._commit_merge(out, buckets, has_deletes)
+                return len(buckets), n_rows, did_dedup
+            finally:
+                stamped.unpersist()
 
     def _merge_dv(self, stg: DataFrame, merge_kwargs: dict,
                   has_del: bool = True,

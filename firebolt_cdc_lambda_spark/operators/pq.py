@@ -51,6 +51,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import fsio
+
 _QUANT = "transform({col}, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
 _DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         "CAST(0 AS BIGINT), (acc, v) -> acc + v)")
@@ -70,20 +72,12 @@ class PqIndex:
         self.path = path.rstrip("/")
         self.n_subspaces = n_subspaces
         self.n_codes = n_codes
-        # per-store schema memo (codes/codebooks layouts are fixed at
-        # build time): later reads pass the schema explicitly instead of
-        # paying a footer-inference job per probe (round 13, guide §1/§6)
-        self._store_schema: dict[str, object] = {}
 
     def _read_store(self, store: str) -> DataFrame:
-        cached = self._store_schema.get(store)
-        reader = self.spark.read
-        if cached is not None:
-            reader = reader.schema(cached)
-        df = reader.parquet(f"{self.path}/{store}")
-        if cached is None:
-            self._store_schema[store] = df.schema
-        return df
+        # schema pin (codes/codebooks layouts are fixed at build
+        # time): later reads pass the schema explicitly instead of
+        # paying a footer-inference job per probe (round 13, guide §1/§6)
+        return fsio.read_pinned(self.spark, f"{self.path}/{store}")
 
     # -- shared shaping ---------------------------------------------------
     def _subvectors(self, df: DataFrame, id_col: str,
@@ -134,13 +128,16 @@ class PqIndex:
         writer = codes.write.mode("overwrite")
         if cells is not None:
             codes = codes.join(cells.selectExpr("vec_id", "cell"), "vec_id")
+            # STATIC, like IvfIndex.build: a rebuild drops old cells
             writer = codes.repartition("cell").write.mode("overwrite") \
+                .option("partitionOverwriteMode", "static") \
                 .partitionBy("cell")
         writer.parquet(f"{self.path}/codes")
         cb.write.mode("overwrite").parquet(f"{self.path}/codebooks")
-        # a rebuild may change layout (cell partitioning, id type);
-        # drop the schema memo
-        self._store_schema.clear()
+        # a rebuild may change layout (cell partitioning, id type):
+        # drop the pins
+        fsio.unpin(f"{self.path}/codes")
+        fsio.unpin(f"{self.path}/codebooks")
 
     # -- training ---------------------------------------------------------
     def train_codebooks(self, vectors: DataFrame, id_col: str = "vec_id",

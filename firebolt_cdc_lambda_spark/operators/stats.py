@@ -66,6 +66,8 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
+from .. import fsio
+from ..session import AQE_OFF, conf_scope
 from .merge import KeyedTable
 from .sidecar_index import SidecarIndex
 
@@ -199,7 +201,7 @@ class StatsIndex(SidecarIndex):
          # bloom refresh_many equivalence test, round 9)
          .option("partitionOverwriteMode", "static")
          .partitionBy("b").parquet(self.stats_path))
-        self._stats_schema = stats.schema
+        fsio.pin(self.stats_path, stats.schema)
         n_files = stats.count()
         built = sorted(self.table.file_stats())
         self._save_side({"column": self.column,
@@ -235,7 +237,7 @@ class StatsIndex(SidecarIndex):
              # STATIC, like build(): see the single-build comment
              .option("partitionOverwriteMode", "static")
              .partitionBy("b").parquet(ix.stats_path))
-            ix._stats_schema = one.schema
+            fsio.pin(ix.stats_path, one.schema)
             ix._save_side({"column": c,
                            "table_version": ix._current_tv(),
                            "built": built, "dirty": []})
@@ -261,7 +263,7 @@ class StatsIndex(SidecarIndex):
         (one.repartition("b").write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("b").parquet(self.stats_path))
-        self._stats_schema = one.schema
+        fsio.pin(self.stats_path, one.schema)
         refreshed = {int(r[0]) for r in
                      one.select("b").distinct().collect()}
         fs, _, jvm = self.table._fs_and_path(self.table.path)
@@ -352,16 +354,10 @@ class StatsIndex(SidecarIndex):
         if side is None or side["table_version"] != self._current_tv():
             return None
         try:
-            # schema memo (round 13, guide §1/§6): the stats layout is
-            # fixed by the writes, which all refresh the memo — no
+            # schema pin (round 13, guide §1/§6): the stats layout is
+            # fixed by the writes, which all re-pin it — no
             # footer-inference job per probe; first read still infers
-            cached = getattr(self, "_stats_schema", None)
-            if cached is not None:
-                stats = self.spark.read.schema(cached).parquet(
-                    self.stats_path)
-            else:
-                stats = self.spark.read.parquet(self.stats_path)
-                self._stats_schema = stats.schema
+            stats = fsio.read_pinned(self.spark, self.stats_path)
         except AnalysisException as exc:
             # ONLY verifiably-absent states degrade to a full scan
             # (registered column whose dataset was never built, or an
@@ -391,13 +387,9 @@ class StatsIndex(SidecarIndex):
         # over the (file-count-sized) stats dataset — per-stage
         # re-planning only multiplies scheduled jobs (the bloom-probe
         # rationale, round 13)
-        from .merge import _aqe_disable, _aqe_restore
-        _aqe_disable(self.spark)
-        try:
+        with conf_scope(self.spark, **AQE_OFF):
             matched = [(int(r[0]), str(r[1])) for r in
                        stats.where(cond).select("b", "f").collect()]
-        finally:
-            _aqe_restore(self.spark)
         dirty = {int(b) for b in side.get("dirty", [])}
         want = None if buckets is None else {int(b) for b in buckets}
         listing = self._listing()

@@ -9,7 +9,9 @@ bucket-pruned snapshot merge (see operators/merge.py).
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -81,3 +83,66 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+#: The merge-sized pause of adaptive execution: merges, index probes and
+#: metadata-sized collects pin every physical choice themselves, and
+#: per-stage re-planning only multiplies their scheduled jobs.
+AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
+
+# Temporary overrides toggle the SESSION-global conf — under fleet mode,
+# many tables' foreachBatch merges run concurrently on one shared
+# session, and naive set/restore races: scope B can capture the value
+# set by in-flight scope A as its restore value and leave it set for the
+# whole session.  Refcount instead, per (session, key): the first scope
+# in captures the true prior value and sets; the last scope out restores
+# it.  (Analytic queries running concurrently with a merge lose AQE for
+# that window — a bounded perf effect, never a correctness one.)
+#
+# Per-query scoping via spark.newSession() (an isolated SQLConf on the
+# shared context) was considered and REJECTED: the staging DataFrame is
+# created by the CALLER's session — under streaming it is the
+# foreachBatch micro-batch DF, whose plan is bound to that session and
+# its state — and re-binding or re-materializing it on a clone session
+# is either unsupported (streaming sources) or costs an extra write.
+# Revisit only if Spark grows true per-query conf scoping.
+_CONF_LOCK = threading.Lock()
+# (id(session), key) -> [depth, value set, prior value or None if unset]
+_CONF_HELD: dict[tuple[int, str], list] = {}
+
+
+@contextlib.contextmanager
+def conf_scope(spark: SparkSession, **conf: str):
+    """Override session conf keys for the duration of the block, e.g.
+    ``with conf_scope(spark, **AQE_OFF):``.  Overlapping scopes on one
+    key share the override: the first one in reads the prior value and
+    sets the key, the last one out restores the prior value, or unsets
+    the key if it had no explicit value.  Overlapping scopes must ask
+    for the same value — a conflicting one raises ValueError."""
+    entered: list[str] = []
+    try:
+        with _CONF_LOCK:
+            for key, value in conf.items():
+                held = _CONF_HELD.get((id(spark), key))
+                if held is None:
+                    prior = spark.conf.get(key, None)
+                    spark.conf.set(key, value)
+                    _CONF_HELD[(id(spark), key)] = [1, value, prior]
+                elif held[1] != value:
+                    raise ValueError(f"conf_scope: {key} is held at "
+                                     f"{held[1]!r}, not {value!r}")
+                else:
+                    held[0] += 1
+                entered.append(key)
+        yield
+    finally:
+        with _CONF_LOCK:
+            for key in reversed(entered):
+                held = _CONF_HELD[(id(spark), key)]
+                held[0] -= 1
+                if held[0] == 0:
+                    del _CONF_HELD[(id(spark), key)]
+                    if held[2] is None:
+                        spark.conf.unset(key)
+                    else:
+                        spark.conf.set(key, held[2])

@@ -22,7 +22,19 @@ from pyspark.sql import SparkSession
 
 from .. import fsio
 from ..pipeline import CdcPipeline
+from ..session import conf_scope
 from .cdc_stream import CdcStream
+
+#: Pins the parallel-partition-discovery threshold DOWN to the stock 32
+#: for the duration of a CONCURRENT drain.  The session default (256,
+#: round 13) keeps the engine's 64-256-dir listings driver-side — the
+#: right trade for every single-stream path (measured: interleaved A/B
+#: wins for joinview and the lone CdcStream) — but N concurrent
+#: per-table drains then serialize their listings on the one driver,
+#: and the distributed listing job wins again (measured: fleet files/s,
+#: 32 beats 256 in 5/5 interleaved trials).
+_DRAIN_LISTING = {
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "32"}
 
 
 class CdcFleet:
@@ -55,45 +67,12 @@ class CdcFleet:
                 max_files_per_trigger=self.max_files_per_trigger)
         return out
 
-    @staticmethod
-    def _concurrent_drain_listing(spark: SparkSession):
-        """Context manager: pin the parallel-partition-discovery
-        threshold DOWN to the stock 32 for the duration of a CONCURRENT
-        drain, restoring the session value after.  The session default
-        (256, round 13) keeps the engine's 64-256-dir listings
-        driver-side — the right trade for every single-stream path
-        (measured: interleaved A/B wins for joinview and the lone
-        CdcStream) — but N concurrent per-table drains then serialize
-        their listings on the one driver, and the distributed listing
-        job wins again (measured: fleet files/s, 32 beats 256 in 5/5
-        interleaved trials).  Env-overridable like the session knob."""
-        import contextlib
-        import os
-
-        @contextlib.contextmanager
-        def _cm():
-            key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-            val = os.environ.get("SPARK_GRAFT_PAR_DISCOVERY_FLEET", "32")
-            try:
-                prior = spark.conf.get(key)
-            except Exception:  # noqa: BLE001
-                prior = None
-            spark.conf.set(key, val)
-            try:
-                yield
-            finally:
-                if prior is not None:
-                    spark.conf.set(key, prior)
-                else:
-                    spark.conf.unset(key)
-        return _cm()
-
     def run_once(self, spark: SparkSession, timeout_sec: int = 600) -> dict[str, str]:
         """Drain every table's backlog (availableNow) concurrently; returns
         per-table status."""
         queries = {}
         status: dict[str, str] = {}
-        with self._concurrent_drain_listing(spark):
+        with conf_scope(spark, **_DRAIN_LISTING):
             for table, stream in self.streams().items():
                 try:
                     queries[table] = stream.start(spark, available_now=True)
@@ -130,7 +109,7 @@ class CdcFleet:
         deadline: dict[str, float] = {}
         status: dict[str, str] = {}
         import time as _time
-        with self._concurrent_drain_listing(spark):
+        with conf_scope(spark, **_DRAIN_LISTING):
             self._run_pooled_loop(spark, pending, active, deadline,
                                   status, width, timeout_sec, _time)
         return status

@@ -426,3 +426,23 @@ def test_downward_rebucket_rebuild_clears_stale_partitions(spark, tmp_path):
     assert words_b <= set(range(4)), words_b      # no stale ids
     cands = ix.candidate_buckets(["cat_3"])
     assert cands is not None and max(cands) < 4
+
+
+def test_words_partition_of_another_layout_fails_open(spark, table, tmp_path):
+    """A words file whose types do not match the pinned (w INT, bits
+    BIGINT, b INT) layout surfaces only when the probe's collect reads
+    it.  The probe must fail open there too: no candidates, and lookup
+    falls back to the full scan instead of raising."""
+    import shutil
+    ix = BloomIndex(table, "category")
+    ix.build()
+    part = f"{ix.words_path}/b=0"
+    bad = str(tmp_path / "bad_words")
+    (spark.read.parquet(part)
+     .selectExpr("w", "CAST(bits AS STRING) AS bits")
+     .write.parquet(bad))
+    shutil.rmtree(part)
+    shutil.copytree(bad, part)
+    assert ix.candidate_buckets(["cat_3"]) is None
+    got = sorted(tuple(r) for r in ix.lookup(["cat_3"]).collect())
+    assert got == _expect(table, ["cat_3"]) and got

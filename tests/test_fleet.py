@@ -194,3 +194,25 @@ def test_fleet_maintenance_pooled_equals_serial(spark, tmp_path):
             kt = pipe.target_for(t, ["id"])
             assert kt._read_raw().where(F.col(TOMBSTONE_COL)).count() == 0
             assert {r["id"] for r in kt.read().collect()} == set(range(2, 8)) | {0}
+
+
+def test_overlapping_drain_listing_scopes_restore_the_session_value(spark):
+    """Two drains in flight on one session both pin the listing
+    threshold.  Exiting in A-enter, B-enter, A-exit, B-exit order must
+    keep it pinned while B still runs and restore the session value when
+    the last drain leaves — B must not capture A's 32 as its prior."""
+    from firebolt_cdc_lambda_spark.session import conf_scope
+    from firebolt_cdc_lambda_spark.streaming.fleet import _DRAIN_LISTING
+    (key, pinned), = _DRAIN_LISTING.items()
+    prior = spark.conf.get(key)
+    assert prior != pinned
+    drain_a = conf_scope(spark, **_DRAIN_LISTING)
+    drain_b = conf_scope(spark, **_DRAIN_LISTING)
+    drain_a.__enter__()
+    assert spark.conf.get(key) == pinned
+    drain_b.__enter__()
+    assert spark.conf.get(key) == pinned
+    drain_a.__exit__(None, None, None)
+    assert spark.conf.get(key) == pinned
+    drain_b.__exit__(None, None, None)
+    assert spark.conf.get(key) == prior

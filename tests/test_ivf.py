@@ -148,3 +148,25 @@ def test_ivf_custom_centroids(spark, tmp_path):
     assert stored == {10, 20, 30, 40}
     got = ivf.probe(vecs.where(F.col("vec_id") < 2), top_k=3)
     assert got.count() == 6                         # 2 queries x top-3
+
+
+def test_probe_reads_a_rebuild_made_through_another_handle(spark, tmp_path):
+    """Schema pins are per path, not per handle: after handle B rebuilds
+    the index with string ids, handle A — whose earlier probe pinned
+    the integer-id layout — must probe the new layout and return B's
+    ids."""
+    path = str(tmp_path / "ivf")
+    vecs = _vectors(spark)
+    a = IvfIndex(spark, path, n_centroids=4, nprobe=2)
+    a.build(vecs)
+    assert a.probe(vecs.where(F.col("vec_id") < 2), top_k=3).count() > 0
+    svecs = vecs.selectExpr("concat('v', CAST(vec_id AS STRING)) AS vec_id",
+                            "embedding")
+    b = IvfIndex(spark, path, n_centroids=4, nprobe=2)
+    b.build(svecs)
+    queries = svecs.where(F.col("vec_id").isin("v0", "v1"))
+    key = lambda rows: sorted((r["query_id"], r["vec_id"], r["rank"])
+                              for r in rows)
+    got = key(a.probe(queries, top_k=3).collect())
+    assert got and all(isinstance(vid, str) for _, vid, _ in got)
+    assert got == key(b.probe(queries, top_k=3).collect())

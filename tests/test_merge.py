@@ -284,16 +284,38 @@ def test_aqe_refcount_survives_concurrent_merges(spark):
     the AQE disable must refcount so the LAST merge out restores the
     true prior value (naive set/restore could capture 'false' set by a
     concurrent merge and leave AQE off session-wide)."""
-    from firebolt_cdc_lambda_spark.operators.merge import (
-        _aqe_disable, _aqe_restore)
+    from firebolt_cdc_lambda_spark.session import AQE_OFF, conf_scope
     prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    _aqe_disable(spark)   # merge A enters
-    _aqe_disable(spark)   # merge B enters while A in flight
+    merge_a = conf_scope(spark, **AQE_OFF)
+    merge_b = conf_scope(spark, **AQE_OFF)
+    merge_a.__enter__()   # merge A enters
+    merge_b.__enter__()   # merge B enters while A in flight
     assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    _aqe_restore(spark)   # A leaves: B still in flight
+    merge_a.__exit__(None, None, None)   # A leaves: B still in flight
     assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    _aqe_restore(spark)   # B leaves: true prior restored
+    merge_b.__exit__(None, None, None)   # B leaves: true prior restored
     assert spark.conf.get("spark.sql.adaptive.enabled") == prior
+
+
+def test_aqe_scope_unsets_a_key_that_had_no_explicit_value(spark):
+    """A key the session never set explicitly comes back unset — not
+    pinned to a value the scope guessed for it."""
+    from firebolt_cdc_lambda_spark.session import AQE_OFF, conf_scope
+    key = "spark.sql.adaptive.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        assert spark.conf.get(key, None) is None
+        merge_a = conf_scope(spark, **AQE_OFF)
+        merge_b = conf_scope(spark, **AQE_OFF)
+        merge_a.__enter__()
+        merge_b.__enter__()
+        merge_a.__exit__(None, None, None)
+        assert spark.conf.get(key) == "false"
+        merge_b.__exit__(None, None, None)
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, prior)
 
 
 # -- bucket-pruned point lookups ------------------------------------------
