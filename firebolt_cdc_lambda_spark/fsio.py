@@ -14,10 +14,16 @@ The same goes for the schema pins below: the schemas of parquet
 datasets this process reads repeatedly (corpus tables, index stores,
 zone maps, the delete-vector sidecar), kept so that a read passes the
 schema explicitly instead of paying a footer-inference job.
+
+The module also holds the one dynamic partition overwrite that every
+bucket or index rewrite commits through (``overwrite_partitions``) and
+the read-error whitelist that tells an absent dataset from a fault
+(``is_absent``).
 """
 
 from __future__ import annotations
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -38,6 +44,43 @@ def exists(spark: SparkSession, p: str) -> bool:
 def mkdirs(spark: SparkSession, p: str) -> None:
     fs, path, _ = fs_and_path(spark, p)
     fs.mkdirs(path)
+
+
+def is_absent(exc: PySparkException) -> bool:
+    """True iff a read error means "nothing there": the path matches
+    nothing (PATH_NOT_FOUND) or its dirs hold no files to infer a
+    schema from (UNABLE_TO_INFER_SCHEMA, e.g. an aborted first write).
+    Every other read error belongs to the caller and must re-raise."""
+    return exc.getCondition() in ("PATH_NOT_FOUND",
+                                  "UNABLE_TO_INFER_SCHEMA")
+
+
+def overwrite_partitions(df: DataFrame, root: str, col: str,
+                         emptied=(), num_partitions: int | None = None
+                         ) -> None:
+    """Replace the ``col=`` partitions of ``root`` that ``df`` holds and
+    delete ``root/col=v`` for every ``v`` in ``emptied``.
+
+    The write is a DYNAMIC partition overwrite, set per write: under a
+    session with Spark's STATIC default the same write would wipe every
+    partition ``df`` does not hold.  A partition whose every row went
+    away is absent from ``df``, so the overwrite leaves its old files;
+    the caller names those in ``emptied``.  ``df`` is shuffled on
+    ``col`` (one file per partition) into ``num_partitions`` tasks, or
+    the session's shuffle partitions.  A ``df`` that reads ``root``
+    must be pinned by the caller, and its ``emptied`` set computed,
+    before this call: the commit deletes the files it was read from."""
+    parts = (df.repartition(num_partitions, col) if num_partitions
+             else df.repartition(col))
+    (parts.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy(col).parquet(root))
+    if emptied:
+        fs, base, jvm = fs_and_path(df.sparkSession, root)
+        for v in emptied:
+            p = jvm.org.apache.hadoop.fs.Path(base, f"{col}={v}")
+            if fs.exists(p):
+                fs.delete(p, True)
 
 
 def write_text(spark: SparkSession, p: str, text: str) -> None:

@@ -54,6 +54,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import fsio
 from ..session import AQE_OFF, conf_scope
 from .merge import KeyedTable
 from .sidecar_index import SidecarIndex
@@ -237,9 +238,7 @@ class BloomIndex(SidecarIndex):
                 # dynamic overwrite exactly the dirty buckets' words;
                 # an emptied bucket keeps its old words — harmless,
                 # false-positive-only (refresh()'s own contract)
-                (one.repartition("b").write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("b").parquet(ixs[c].words_path))
+                fsio.overwrite_partitions(one, ixs[c].words_path, "b")
                 side = sides[c]
                 side["built"] = sorted(set(side["built"]) | set(dirty))
                 side["dirty"] = []
@@ -258,10 +257,8 @@ class BloomIndex(SidecarIndex):
         # dynamic overwrite: replace exactly the dirty buckets' words.
         # A bucket emptied since build keeps its old words — harmless,
         # false-positive-only (see module docstring).
-        words = self._words_for(dirty)
-        (words.repartition("b").write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("b").parquet(self.words_path))
+        fsio.overwrite_partitions(self._words_for(dirty),
+                                  self.words_path, "b")
 
     # -- probe -------------------------------------------------------------
     def candidate_buckets(self, values: Sequence) -> list[int] | None:

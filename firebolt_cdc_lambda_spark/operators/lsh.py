@@ -194,8 +194,7 @@ class LshIndex:
             # PATH_NOT_FOUND: store absent or no probed shard written yet.
             # UNABLE_TO_INFER_SCHEMA: shard dirs exist but hold no files
             # (e.g. an aborted first write) — equally "nothing there".
-            if exc.getErrorClass() in ("PATH_NOT_FOUND",
-                                       "UNABLE_TO_INFER_SCHEMA"):
+            if fsio.is_absent(exc):
                 return None
             raise
 

@@ -1203,8 +1203,7 @@ class KeyedTable:
             # read as "empty target" would make the NEXT merge rewrite
             # touched buckets from staging alone — silent loss of every
             # stored row in them.  Same contract as LshIndex._read_shards.
-            if schema is None or exc.getErrorClass() not in (
-                    "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            if schema is None or not fsio.is_absent(exc):
                 raise
             return self.spark.createDataFrame([], schema)
 
@@ -1234,8 +1233,7 @@ class KeyedTable:
             try:
                 return fsio.read_pinned(self.spark, self._dv_path, p)
             except AnalysisException as exc:
-                if exc.getErrorClass() in ("PATH_NOT_FOUND",
-                                           "UNABLE_TO_INFER_SCHEMA"):
+                if fsio.is_absent(exc):
                     continue
                 raise
         return None
@@ -1443,8 +1441,7 @@ class KeyedTable:
                         .parquet(self._delta_path))
             return self.spark.read.parquet(self._delta_path)
         except AnalysisException as exc:
-            if exc.getErrorClass() in ("PATH_NOT_FOUND",
-                                       "UNABLE_TO_INFER_SCHEMA"):
+            if fsio.is_absent(exc):
                 return None
             raise
 
@@ -3711,12 +3708,11 @@ class KeyedTable:
             if fs.exists(drop):
                 fs.delete(drop, True)
             return 0
-        # The two checkpoints below are LAZY (round 14): each
-        # materializes inside the metadata collect that follows it —
-        # one action instead of two per pin.  AQE stays ON: the fold is
-        # real data work (window + anti-join + rewrite) where runtime
-        # partition coalescing earns its keep at scale, unlike the
-        # metadata-sized probe collects the engine pauses AQE around.
+        # The checkpoint below is LAZY (round 14): it materializes
+        # inside the bucket collect that follows it — one action
+        # instead of two.  AQE stays ON for the winner window, real
+        # data work where runtime partition coalescing earns its keep
+        # at scale; _commit_merge pauses it for the sized rewrite.
         win = self._delta_winners(delta).localCheckpoint(eager=False)
         # the append-time bucket stamp is authoritative: num_buckets
         # cannot have changed while a log exists (rebucket folds first);
@@ -3731,18 +3727,12 @@ class KeyedTable:
             "left_anti")
         live = (win.where(~F.col(self.DELTA_DEL_COL))
                 .select(*[F.col(c) for c in raw.columns]))
-        # pin before the self-overwrite (the fold_delete_vectors rule):
-        # the kept-bucket collect below materializes the lazy
-        # checkpoint, so every base row is read and pinned BEFORE the
-        # dynamic overwrite deletes the files it came from (Spark
-        # completes a lazily-checkpointed RDD's missing partitions when
-        # the first job over it finishes)
-        out = base_kept.unionByName(live).localCheckpoint(eager=False)
-        kept_b = {int(r[0]) for r in
-                  out.select(self.BUCKET_COL).distinct().collect()}
-        # flag BEFORE the rewrite commits (see _mark_index_dirty):
-        # folded buckets change content, so bloom AND stats go dirty
-        self._mark_index_dirty(buckets)
+        # the merge's commit: it pins the base rows and takes the
+        # kept-bucket set BEFORE the self-overwrite deletes the files
+        # they came from, and flags bloom AND stats dirty (folded
+        # buckets change content)
+        self._commit_merge(base_kept.unionByName(live), buckets,
+                           has_deletes=True, op="fold")
         if self.versioned:
             # History-preserving fold: the merged content lands as a NEW
             # epoch (op "fold" — the delta-window BOUNDARY from here on),
@@ -3756,35 +3746,10 @@ class KeyedTable:
             # crash before the meta save only under-reports the folded
             # watermark — the next sweep's fold finds an empty window
             # and heals it (the branch above).
-            epoch = self.latest_epoch() + 1
-            self._write_epoch(out, epoch)
-            entries = self._load_manifest()
-            entries.append({
-                "e": epoch, "op": "fold",
-                "buckets": sorted(int(b) for b in kept_b),
-                "emptied": sorted(int(b) for b in buckets
-                                  if b not in kept_b),
-                "num_buckets": self.num_buckets})
-            self._save_manifest(entries)
             self._sync_stored_meta()
             self.delta_folded_seq = self.delta_seq
             self._save_meta()      # persist the folded-seq watermark
             return len(buckets)
-        (out.repartition(self.BUCKET_COL)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(self.BUCKET_COL)
-         .parquet(self.path))
-        emptied = [b for b in buckets if b not in kept_b]
-        if emptied:
-            jvm = self.spark._jvm
-            hconf = self.spark._jsc.hadoopConfiguration()
-            for b in emptied:
-                p = jvm.org.apache.hadoop.fs.Path(
-                    f"{self.path}/{self.BUCKET_COL}={b}")
-                fs = p.getFileSystem(hconf)
-                if fs.exists(p):
-                    fs.delete(p, True)
         self._drop_delta()
         self._sync_stored_meta()
         self._save_meta()          # persist the folded-seq watermark
@@ -3819,26 +3784,8 @@ class KeyedTable:
         cond = F.expr(_key_cond_sql(self.keys, "__t", "__f"))
         kept_rows = raw.join(
             F.broadcast(fold.select(*self.keys).alias("__f")), cond,
-            "left_anti").localCheckpoint(eager=True)   # self-overwrite pin
-        kept_b = {int(r[0]) for r in
-                  kept_rows.select(self.BUCKET_COL).distinct().collect()}
-        # flag BEFORE the rewrite commits (see _mark_index_dirty)
-        self._mark_index_dirty(buckets)
-        (kept_rows.repartition(self.BUCKET_COL)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(self.BUCKET_COL)
-         .parquet(self.path))
-        emptied = [b for b in buckets if b not in kept_b]
-        if emptied:
-            jvm = self.spark._jvm
-            hconf = self.spark._jsc.hadoopConfiguration()
-            for b in emptied:
-                p = jvm.org.apache.hadoop.fs.Path(
-                    f"{self.path}/{self.BUCKET_COL}={b}")
-                fs = p.getFileSystem(hconf)
-                if fs.exists(p):
-                    fs.delete(p, True)
+            "left_anti")
+        self._commit_merge(kept_rows, buckets, has_deletes=True)
         self._write_dv(keep)
         return len(buckets)
 
@@ -3851,75 +3798,64 @@ class KeyedTable:
                           self.spark.sparkContext.defaultParallelism))
 
     def _commit_merge(self, out: DataFrame, buckets: Sequence[int],
-                      has_deletes: bool) -> None:
-        """Write the merged touched-bucket content.  Unversioned: dynamic
-        partition overwrite replaces the touched bucket dirs in place.
-        Versioned: append the content as a NEW epoch's leaf dirs and
-        record the epoch in the manifest — same job count, nothing
-        deleted, every prior version still readable."""
-        if has_deletes:
-            out = out.cache()
-        try:
+                      has_deletes: bool, op: str = "merge") -> None:
+        """Write the rewritten touched-bucket content — the one commit
+        of every bucket rewrite (merges and both folds; ``op`` names it
+        in the versioned manifest).
+        Unversioned: dynamic partition overwrite replaces the touched
+        bucket dirs in place and drops the ones left empty.  Versioned:
+        append the content as a NEW epoch's leaf dirs and record the
+        epoch in the manifest — same job count, nothing deleted, every
+        prior version still readable."""
+        # AQE off, as for the merge: every physical choice below is
+        # pinned (a sized bucket shuffle, a metadata-sized collect),
+        # and under AQE the cached `out` would be materialized by a
+        # job of its own before the collect that fills it.
+        with conf_scope(self.spark, **AQE_OFF):
             if has_deletes:
-                # Compute the kept-bucket set BEFORE the write: the
-                # self-overwrite invalidates the cache (refreshByPath),
-                # and re-executing this self-referencing plan post-write
-                # would re-merge against the already-merged files —
-                # wrong in general, and a hard crash when the pre-merge
-                # table was empty (the plan's partition schema was built
-                # from an empty dir listing).  Running it here also
-                # populates the cache, so the write below reads cached
-                # partitions instead of rescanning the source.
-                # (collect_set: no exchange on _bucket, one final task)
-                kept = set(out.agg(F.collect_set(self.BUCKET_COL))
-                           .first()[0])
-            else:
-                # no deletes -> every touched bucket retains at least its
-                # upserts; the manifest's kept set is just the touched
-                # list, no extra job (measured ~0.3 s/merge saved)
-                kept = set(buckets)
-            # flag BEFORE the data commit (see _mark_index_dirty): a
-            # crash after the flag costs one over-scan; a crash after
-            # the write but before a trailing flag would leave stale
-            # unflagged bloom words over rewritten buckets
-            self._mark_index_dirty(buckets)
-            n_parts = self._batch_width(buckets)
-            if self.versioned:
-                epoch = self.latest_epoch() + 1
-                self._write_epoch(out, epoch, num_partitions=n_parts)
-                entries = self._load_manifest()
-                entries.append({
-                    "e": epoch, "op": "merge",
-                    "buckets": sorted(int(b) for b in kept),
-                    "emptied": sorted(int(b) for b in buckets
-                                      if b not in kept),
-                    "num_buckets": self.num_buckets})
-                self._save_manifest(entries)
-                return
-            # dynamic partition overwrite: only the buckets present in
-            # `out` (== the touched buckets) are replaced on disk.
-            # Set per-write, NOT via session conf — under a session with
-            # the default STATIC mode this write would silently wipe
-            # every untouched bucket.
-            (out.repartition(n_parts, self.BUCKET_COL)
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy(self.BUCKET_COL)
-             .parquet(self.path))
-            if has_deletes:
-                # A bucket whose every row was deleted is absent from
-                # `out`, so dynamic overwrite leaves its old files —
-                # drop it here.
-                emptied = [b for b in buckets if b not in kept]
-                if emptied:
-                    jvm = self.spark._jvm
-                    hconf = self.spark._jsc.hadoopConfiguration()
-                    for b in emptied:
-                        p = jvm.org.apache.hadoop.fs.Path(
-                            f"{self.path}/{self.BUCKET_COL}={b}")
-                        fs = p.getFileSystem(hconf)
-                        if fs.exists(p):
-                            fs.delete(p, True)
-        finally:
-            if has_deletes:
-                out.unpersist()
+                out = out.cache()
+            try:
+                if has_deletes:
+                    # Compute the kept-bucket set BEFORE the write: the
+                    # self-overwrite invalidates the cache (refreshByPath),
+                    # and re-executing this self-referencing plan post-write
+                    # would re-merge against the already-merged files —
+                    # wrong in general, and a hard crash when the pre-merge
+                    # table was empty (the plan's partition schema was built
+                    # from an empty dir listing).  Running it here also
+                    # populates the cache, so the write below reads cached
+                    # partitions instead of rescanning the source.
+                    # (collect_set: no exchange on _bucket, one final task)
+                    kept = set(out.agg(F.collect_set(self.BUCKET_COL))
+                               .first()[0])
+                else:
+                    # no deletes -> every touched bucket retains at least its
+                    # upserts; the manifest's kept set is just the touched
+                    # list, no extra job (measured ~0.3 s/merge saved)
+                    kept = set(buckets)
+                emptied = sorted(int(b) for b in buckets if b not in kept)
+                # flag BEFORE the data commit (see _mark_index_dirty): a
+                # crash after the flag costs one over-scan; a crash after
+                # the write but before a trailing flag would leave stale
+                # unflagged bloom words over rewritten buckets
+                self._mark_index_dirty(buckets)
+                n_parts = self._batch_width(buckets)
+                if self.versioned:
+                    epoch = self.latest_epoch() + 1
+                    self._write_epoch(out, epoch, num_partitions=n_parts)
+                    entries = self._load_manifest()
+                    entries.append({
+                        "e": epoch, "op": op,
+                        "buckets": sorted(int(b) for b in kept),
+                        "emptied": emptied,
+                        "num_buckets": self.num_buckets})
+                    self._save_manifest(entries)
+                    return
+                # only the buckets present in `out` (== the touched buckets
+                # that kept a row) are replaced on disk
+                fsio.overwrite_partitions(out, self.path, self.BUCKET_COL,
+                                          emptied=emptied,
+                                          num_partitions=n_parts)
+            finally:
+                if has_deletes:
+                    out.unpersist()

@@ -28,6 +28,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsio
+
 
 class RollupTable:
     BUCKET_COL = "_gbucket"
@@ -115,22 +117,10 @@ class RollupTable:
                 # wrong results, or a crash if the pre-refresh table was
                 # empty.  This collect also warms the cache for the write.
                 kept_b = {r[0] for r in out.select(self.BUCKET_COL).distinct().collect()}
-                (out.repartition(self.BUCKET_COL)
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy(self.BUCKET_COL)
-                 .parquet(self.path))
-                # a bucket whose only group vanished is absent from `out`;
-                # dynamic overwrite leaves its stale files — drop it
-                jvm = self.spark._jvm
-                hconf = self.spark._jsc.hadoopConfiguration()
-                for b in buckets:
-                    if b not in kept_b:
-                        p = jvm.org.apache.hadoop.fs.Path(
-                            f"{self.path}/{self.BUCKET_COL}={b}")
-                        fs = p.getFileSystem(hconf)
-                        if fs.exists(p):
-                            fs.delete(p, True)
+                # a bucket whose only group vanished is absent from `out`
+                fsio.overwrite_partitions(
+                    out, self.path, self.BUCKET_COL,
+                    emptied=[b for b in buckets if b not in kept_b])
                 return n_groups
             finally:
                 out.unpersist()

@@ -41,6 +41,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import fsio
+
 #: metadata columns this module appends to the key + tracked columns
 META_COLS = ("valid_from", "valid_to", "version", "is_current")
 
@@ -195,8 +197,7 @@ class Scd2Table:
     def _load_meta(self) -> None:
         import json
 
-        from ..fsio import read_text
-        text = read_text(self.spark, f"{self.path}/{self.META}")
+        text = fsio.read_text(self.spark, f"{self.path}/{self.META}")
         if text is None:
             return
         meta = json.loads(text)
@@ -219,8 +220,7 @@ class Scd2Table:
     def _save_meta(self) -> None:
         import json
 
-        from ..fsio import write_text
-        write_text(self.spark, f"{self.path}/{self.META}", json.dumps({
+        fsio.write_text(self.spark, f"{self.path}/{self.META}", json.dumps({
             "keys": self.keys, "order": self.order,
             "tracked": self.tracked, "num_buckets": self.num_buckets,
             "op_col": self.op_col, "delete_values": self.delete_values}))
@@ -254,14 +254,14 @@ class Scd2Table:
             F.pmod(F.xxhash64(*[F.col(k) for k in self.keys]),
                    F.lit(self.num_buckets)))
 
-    def _write(self, dim: DataFrame, dynamic: bool) -> None:
-        # init must be a STATIC overwrite (wipe the whole path — a
-        # dynamic one would leave stale buckets from any prior table
-        # there); apply must be DYNAMIC (replace only written buckets).
+    def _write(self, dim: DataFrame) -> None:
+        # init and rewind must be a STATIC overwrite (wipe the whole
+        # path — a dynamic one would leave stale buckets from any prior
+        # table there); apply replaces only the buckets it wrote
+        # (fsio.overwrite_partitions).
         (self._with_bucket(dim).repartition(self.BUCKET_COL)
          .write.mode("overwrite")
-         .option("partitionOverwriteMode",
-                 "dynamic" if dynamic else "static")
+         .option("partitionOverwriteMode", "static")
          .partitionBy(self.BUCKET_COL)
          .parquet(self.path))
 
@@ -273,8 +273,7 @@ class Scd2Table:
         for attr, val in self._ctor.items():
             setattr(self, attr, val)
         self._write(scd2_snapshot(self._prep(history), self.keys,
-                                  self.order, self._tracked_eff),
-                    dynamic=False)
+                                  self.order, self._tracked_eff))
         self._save_meta()
 
     def has_data(self) -> bool:
@@ -282,9 +281,8 @@ class Scd2Table:
         crashed first init leaves only _temporary/ (or nothing), which
         must route the next batch back to init, not apply — otherwise
         the stream wedges on an uninferrable empty dir."""
-        from ..fsio import list_names
         return any(n.startswith(f"{self.BUCKET_COL}=")
-                   for n in list_names(self.spark, self.path))
+                   for n in fsio.list_names(self.spark, self.path))
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path).drop(self.BUCKET_COL)
@@ -306,7 +304,7 @@ class Scd2Table:
             # contract, merge.py._read_raw).  Partial matches never
             # error — Spark globs the single pattern and proceeds with
             # whatever dirs exist.
-            if exc.getErrorClass() != "PATH_NOT_FOUND":
+            if exc.getCondition() != "PATH_NOT_FOUND":
                 raise
             return self.read().limit(0)
 
@@ -325,7 +323,8 @@ class Scd2Table:
         # pin the result before the dynamic overwrite replaces the very
         # files the plan reads (same hazard as RollupTable pre-images)
         redone = redone.localCheckpoint(eager=True)
-        self._write(redone, dynamic=True)
+        fsio.overwrite_partitions(self._with_bucket(redone), self.path,
+                                  self.BUCKET_COL)
         return buckets
 
     def current(self) -> DataFrame:
@@ -376,7 +375,7 @@ class Scd2Table:
                .drop("__rn"))
         # pin before the overwrite replaces the files the plan reads
         out = out.localCheckpoint(eager=True)
-        self._write(out, dynamic=False)
+        self._write(out)
         # the static overwrite wiped the whole path INCLUDING the
         # _scd2_meta.json sidecar; re-save it (mirroring init) or a
         # later handle silently falls back to its constructor

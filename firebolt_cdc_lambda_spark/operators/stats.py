@@ -260,17 +260,11 @@ class StatsIndex(SidecarIndex):
         """Dynamic-overwrite exactly ``dirty``'s stats partitions from a
         single-column stats frame, deleting partitions whose bucket
         came back empty (shared by refresh and refresh_many)."""
-        (one.repartition("b").write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("b").parquet(self.stats_path))
-        fsio.pin(self.stats_path, one.schema)
         refreshed = {int(r[0]) for r in
                      one.select("b").distinct().collect()}
-        fs, _, jvm = self.table._fs_and_path(self.table.path)
-        for b in set(dirty) - refreshed:     # emptied buckets
-            p = jvm.org.apache.hadoop.fs.Path(f"{self.stats_path}/b={b}")
-            if fs.exists(p):
-                fs.delete(p, True)
+        fsio.overwrite_partitions(one, self.stats_path, "b",
+                                  emptied=set(dirty) - refreshed)
+        fsio.pin(self.stats_path, one.schema)
 
     @classmethod
     def refresh_many(cls, table: KeyedTable,
@@ -367,8 +361,7 @@ class StatsIndex(SidecarIndex):
             # a PERMANENT silent full scan with no signal — the same
             # whitelist contract as _read_raw / _read_dv (advice
             # finding, round 8).
-            if exc.getErrorClass() in ("PATH_NOT_FOUND",
-                                       "UNABLE_TO_INFER_SCHEMA"):
+            if fsio.is_absent(exc):
                 return None
             raise
         # NO cast of the probe bounds to the column type: a plain cast

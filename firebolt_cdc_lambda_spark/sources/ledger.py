@@ -34,6 +34,8 @@ from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import fsio
+
 LEDGER_SCHEMA = T.StructType([
     T.StructField("file_key", T.StringType(), False),
     T.StructField("status", T.StringType(), False),
@@ -104,8 +106,7 @@ class FileLedger:
             # is_processed=False and replay files — harmless only
             # because merges are idempotent, but the error belongs to
             # the caller).  Same contract as KeyedTable._read_raw.
-            if exc.getErrorClass() not in ("PATH_NOT_FOUND",
-                                           "UNABLE_TO_INFER_SCHEMA"):
+            if not fsio.is_absent(exc):
                 raise
             df = self.spark.createDataFrame([], schema)
         if self.partition_by_day and not with_pday:

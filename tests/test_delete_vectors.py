@@ -128,6 +128,33 @@ def test_fold_applies_physically_and_keeps_recent(spark, dv_table):
     assert 6 not in {r["k"] for r in dv_table._read_raw().collect()}
 
 
+def test_fold_drops_the_bucket_its_deletes_empty(spark, tmp_path,
+                                                 dv_table):
+    """A fold whose entries take every row of one bucket and some rows
+    of another: the emptied bucket dir is gone, the partly deleted one
+    keeps its survivors, and the snapshot equals a copy-on-write twin
+    given the same batch."""
+    by_bucket: dict = {}
+    for r in dv_table._read_raw().select("k", "_bucket").collect():
+        by_bucket.setdefault(r["_bucket"], []).append(r["k"])
+    order = sorted(by_bucket, key=lambda b: len(by_bucket[b]))
+    full, part = order[0], order[-1]
+    assert len(by_bucket[part]) >= 2
+    gone = by_bucket[full] + by_bucket[part][:1]
+    eager = KeyedTable(spark, str(tmp_path / "eager"), ["k"],
+                       num_buckets=4)
+    eager.init(spark.createDataFrame(
+        rows([(i, f"v{i}", "I") for i in range(10)], ts(0))).drop("Op"))
+    batch = spark.createDataFrame(rows([(k, "x", "D") for k in gone], ts(1)))
+    for kt in (eager, dv_table):
+        kt.merge_batch(batch, version_col="load_timestamp")
+    assert dv_table.fold_delete_vectors() == 2
+    assert not (tmp_path / "t" / f"_bucket={full}").exists()
+    assert full not in dv_table.file_stats()
+    assert part in dv_table.file_stats()
+    assert state(dv_table) == state(eager)
+
+
 def test_mode_persisted_and_exclusions(spark, tmp_path):
     kt = KeyedTable(spark, str(tmp_path / "t"), ["k"], num_buckets=2,
                     delete_vectors=True)

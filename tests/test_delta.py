@@ -512,6 +512,27 @@ def test_fold_crash_before_log_drop_converges(spark, tmp_path,
     assert _snap(fresh) == expected
 
 
+def test_fold_drops_the_bucket_its_deletes_empty(spark, tmp_path):
+    """Unversioned fold whose deletes take every row of one bucket and
+    some rows of another: the emptied bucket dir is gone (the dynamic
+    overwrite alone would leave its old file serving the deleted
+    rows), the partly deleted bucket keeps its survivors."""
+    eager, delta = _twins(spark, tmp_path, n=20, buckets=4)
+    by_bucket: dict = {}
+    for r in delta._with_bucket(spark.createDataFrame(
+            _mk_rows(range(20)))).select("id", "_bucket").collect():
+        by_bucket.setdefault(r["_bucket"], []).append(r["id"])
+    order = sorted(by_bucket, key=lambda b: len(by_bucket[b]))
+    full, part = order[0], order[-1]
+    assert len(by_bucket[part]) >= 2
+    gone = by_bucket[full] + by_bucket[part][:1]
+    _apply_both(spark, eager, delta, _mk_rows(gone, op="D"))
+    assert delta.fold_deltas() == 2
+    assert not (tmp_path / "delta" / f"_bucket={full}").exists()
+    assert full not in delta.file_stats() and part in delta.file_stats()
+    assert _snap(delta) == _snap(eager)
+
+
 def test_delta_primary_with_rollup_and_joinview(spark, tmp_path):
     """Interplay: a delta-mode PRIMARY feeding a RollupTable and a
     JoinView through the pipeline — both maintained views must read

@@ -378,7 +378,7 @@ def test_read_raw_only_absent_paths_read_as_empty(spark, tmp_path):
         def option(self, *_a, **_k):
             return self
         def parquet(self, *_a, **_k):
-            # no errorClass => getErrorClass() is None, i.e. NOT one of
+            # no errorClass => getCondition() is None, i.e. NOT one of
             # the whitelisted "verifiably absent" classes
             raise AnalysisException("simulated transient listing failure")
 

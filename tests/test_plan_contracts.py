@@ -303,7 +303,7 @@ def test_clone_read_union_of_scans_no_exchange(spark, tmp_path):
 
 # -- per-file merge: every stage as wide as its input ---------------------
 
-def _write_cdc_file(path, n, key_offset=0):
+def _write_cdc_file(path, n, key_offset=0, op="U"):
     """One small DMS-shaped CDC file, written by pyarrow in row order."""
     import datetime as dt
     import pyarrow as pa
@@ -312,7 +312,7 @@ def _write_cdc_file(path, n, key_offset=0):
     pq.write_table(pa.table({
         "id": pa.array([key_offset + i for i in range(n)], pa.int64()),
         "v": [f"v{i}" for i in range(n)],
-        "Op": ["U"] * n,
+        "Op": [op] * n,
         "load_timestamp": pa.array([ts] * n, pa.timestamp("us")),
     }), path)
     return path
@@ -361,10 +361,17 @@ def test_merge_fused_agg_no_hash_exchange(spark, tmp_path, monkeypatch):
     assert all("hashpartitioning" not in p for p in fused), fused[0]
 
 
-@pytest.mark.parametrize("versioned", [False, True])
+@pytest.mark.parametrize("versioned, rewrite", [
+    pytest.param(False, "merge_raw_batch", id="False"),
+    pytest.param(True, "merge_raw_batch", id="True"),
+    pytest.param(False, "fold_deltas", id="fold_deltas-False"),
+    pytest.param(True, "fold_deltas", id="fold_deltas-True"),
+    pytest.param(False, "fold_delete_vectors",
+                 id="fold_delete_vectors-False")])
 def test_commit_merge_shuffle_sized_to_touched_buckets(
-        spark, tmp_path, monkeypatch, versioned):
-    """The bucket write shuffles to min(touched buckets,
+        spark, tmp_path, monkeypatch, versioned, rewrite):
+    """Every bucket rewrite (a merge, a delta-log fold, a delete-vector
+    fold) shuffles its write to min(touched buckets,
     defaultParallelism) partitions, not spark.sql.shuffle.partitions,
     and still writes exactly one file per touched bucket."""
     import re
@@ -372,17 +379,25 @@ def test_commit_merge_shuffle_sized_to_touched_buckets(
     from firebolt_cdc_lambda_spark.operators.merge import KeyedTable
     from firebolt_cdc_lambda_spark.sources.ingest import read_cdc_files
     cores = spark.sparkContext.defaultParallelism
+    mode = {"fold_deltas": {"delta_upserts": True},
+            "fold_delete_vectors": {"delete_vectors": True}}
     kt = KeyedTable(spark, str(tmp_path / "t"), ["id"], num_buckets=64,
-                    versioned=versioned)
+                    versioned=versioned, **mode.get(rewrite, {}))
     kt.init(spark.range(1000).selectExpr("id", "'x' AS v"))
+    op = "D" if rewrite == "fold_delete_vectors" else "U"
     for n_keys, name in ((2, "small"), (300, "wide")):
         staging = read_cdc_files(spark, _write_cdc_file(
-            str(tmp_path / f"{name}.parquet"), n_keys, key_offset=7))
+            str(tmp_path / f"{name}.parquet"), n_keys, key_offset=7, op=op))
         touched = len({r[0] for r in kt._with_bucket(staging)
                        .select("_bucket").collect()})
+        if rewrite == "merge_raw_batch":
+            run = lambda: kt.merge_raw_batch(staging)[0]  # noqa: E731
+        else:
+            kt.merge_raw_batch(staging)     # into the log / the vectors
+            run = getattr(kt, rewrite)
         plans: list[str] = []
         _capture(monkeypatch, DataFrameWriter, "parquet", plans)
-        assert kt.merge_raw_batch(staging)[0] == touched
+        assert run() == touched
         monkeypatch.undo()
         widths = {int(m) for p in plans for m in re.findall(
             r"hashpartitioning\(_bucket#\d+L?, (\d+)\)", p)}
