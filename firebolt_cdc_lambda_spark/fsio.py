@@ -16,9 +16,10 @@ zone maps, the delete-vector sidecar), kept so that a read passes the
 schema explicitly instead of paying a footer-inference job.
 
 The module also holds the one dynamic partition overwrite that every
-bucket or index rewrite commits through (``overwrite_partitions``) and
-the read-error whitelist that tells an absent dataset from a fault
-(``is_absent``).
+bucket or index rewrite commits through (``overwrite_partitions``),
+the one crash-safe whole-directory swap and drop (``replace_dir``,
+``drop_dir``, ``recover_dir``) and the read-error whitelist that tells
+an absent dataset from a fault (``is_absent``).
 """
 
 from __future__ import annotations
@@ -81,6 +82,73 @@ def overwrite_partitions(df: DataFrame, root: str, col: str,
             p = jvm.org.apache.hadoop.fs.Path(base, f"{col}={v}")
             if fs.exists(p):
                 fs.delete(p, True)
+
+
+#: suffixes of the sibling dirs a swap or drop of ``path`` passes
+#: through; never a dataset of their own (catalog listings skip them)
+SWAP_SUFFIXES = ("__tmp", "__old", "__dropping")
+
+
+def recover_dir(spark: SparkSession, p: str) -> bool:
+    """Finish a crashed ``replace_dir``/``drop_dir`` of ``p``; True iff
+    it promoted the backup.  Only ``p__old`` beside no ``p`` (a crash
+    between the swap's two renames) holds the committed state, so it
+    is renamed back; ``p__old`` beside ``p`` (a crash before the backup
+    delete) and a ``p__dropping`` are leftovers.  Callers run it where
+    ``p`` was found absent, or before a swap: it costs FS probes."""
+    fs, path, jvm = fs_and_path(spark, p)
+    old = jvm.org.apache.hadoop.fs.Path(f"{p}__old")
+    promoted = False
+    if fs.exists(old):
+        if fs.exists(path):
+            fs.delete(old, True)
+        else:
+            _rename(fs, old, path)
+            promoted = True
+    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{p}__dropping"), True)
+    return promoted
+
+
+def replace_dir(spark: SparkSession, p: str, write) -> None:
+    """Replace directory ``p`` with what ``write(tmp)`` writes to the
+    empty sibling ``p__tmp`` — the complete new content, in-dir
+    sidecars included.  The old ``p`` is renamed to ``p__old`` before
+    the new one is renamed in and deleted only after, so every crash
+    point leaves the old or the new state whole: ``recover_dir``
+    promotes the backup of a crash between the renames.  ``write`` may
+    read ``p``: its files stay in place until the swap."""
+    recover_dir(spark, p)
+    fs, path, jvm = fs_and_path(spark, p)
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{p}__tmp")
+    fs.delete(tmp, True)
+    write(f"{p}__tmp")
+    old = jvm.org.apache.hadoop.fs.Path(f"{p}__old")
+    if fs.exists(path):
+        _rename(fs, path, old)
+    _rename(fs, tmp, path)
+    fs.delete(old, True)
+
+
+def drop_dir(spark: SparkSession, p: str) -> None:
+    """Delete directory ``p`` in one rename: ``p`` becomes
+    ``p__dropping`` (never read) before the recursive delete, so a
+    crash mid-delete cannot leave a partial ``p`` behind.  A backup
+    ``p__old`` goes first: left behind, ``recover_dir`` would promote
+    it over the dropped ``p``."""
+    fs, path, jvm = fs_and_path(spark, p)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{p}__old"), True)
+    dropping = jvm.org.apache.hadoop.fs.Path(f"{p}__dropping")
+    fs.delete(dropping, True)
+    if fs.exists(path):
+        _rename(fs, path, dropping)
+        fs.delete(dropping, True)
+
+
+def _rename(fs, src, dst) -> None:
+    # Hadoop reports several rename failures by RETURNING false (the
+    # HDFS posture); going on would commit a swap that did not happen
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src} to {dst}")
 
 
 def write_text(spark: SparkSession, p: str, text: str) -> None:

@@ -15,7 +15,7 @@ Design (100 TB first):
   a sibling, not a child, because Spark's file index refuses to read a
   dataset whose root is underscore-prefixed, and a non-underscored
   child dir would be swept into the table's own scans — same
-  convention as the ``__tmp_rewrite`` swap dir), partitioned by
+  convention as the ``fsio.replace_dir`` swap dirs), partitioned by
   bucket so a refresh rewrites only refreshed buckets.  At 16k buckets
   x 64 Kbit filters that is ~128 MB — metadata-sized next to the table,
   far too big for a JSON sidecar, which is why probing is a small Spark

@@ -388,6 +388,8 @@ class KeyedTable:
         #: are extinguished (clone-local full entry + purge).
         self.known_clones: list[dict] = []
         meta = self._load_meta()
+        if meta is None and fsio.recover_dir(spark, self.path):
+            meta = self._load_meta()     # a crashed rewrite's backup
         if meta is not None:
             if not self.keys and meta.get("keys"):
                 # reader-only handles (register_warehouse, ad-hoc
@@ -512,10 +514,7 @@ class KeyedTable:
     _sidecar_cache: dict[str, tuple[int, str]] = {}
 
     def _fs_and_path(self, p: str):
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(p)
-        return path.getFileSystem(hconf), path, jvm
+        return fsio.fs_and_path(self.spark, p)
 
     def _read_sidecar(self, name: str) -> str | None:
         full = f"{self.path}/{name}"
@@ -556,8 +555,11 @@ class KeyedTable:
         self._write_sidecar("_schema.json", df.schema.json())
 
     def _save_meta(self) -> None:
+        self._write_sidecar("_meta.json", self._meta_text())
+
+    def _meta_text(self) -> str:
         import json
-        self._write_sidecar("_meta.json", json.dumps(
+        return json.dumps(
             {"num_buckets": self.num_buckets, "keys": self.keys,
              "tombstones": self.tombstones, "versioned": self.versioned,
              "delete_vectors": self.delete_vectors,
@@ -567,7 +569,7 @@ class KeyedTable:
              "table_version": self.table_version,
              "bloom_columns": self.bloom_columns,
              "stats_columns": self.stats_columns,
-             "known_clones": self.known_clones}))
+             "known_clones": self.known_clones})
 
     def _bump_table_version(self) -> None:
         """Advance table_version for a wholesale rewrite, against the
@@ -1070,11 +1072,7 @@ class KeyedTable:
         return out
 
     def exists(self) -> bool:
-        jvm = self.spark._jvm
-        jsc = self.spark._jsc
-        hconf = jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(self.path)
-        return p.getFileSystem(hconf).exists(p)
+        return fsio.exists(self.spark, self.path)
 
     def _drop_bloom_artifacts(self) -> None:
         """Delete SIBLING secondary-index artifacts (`<path>__bloom_*`
@@ -1217,26 +1215,23 @@ class KeyedTable:
         a rebucket can change key->bucket mapping without ever making a
         stale-partitioned entry invisible.
 
-        Falls back to the ``__dv__old`` backup when the primary is
-        absent: _write_dv's swap renames the previous sidecar aside
-        before renaming the new one in, so the only states are
-        (primary), (primary+backup: crash before backup cleanup —
-        primary wins) and (backup only: crash between the two renames —
-        the backup IS the committed previous state).  A missing sidecar
+        An absent sidecar is recovered first (``fsio.recover_dir``): a
+        crash between the two renames of _write_dv's swap leaves the
+        committed state only in the backup, and a missing sidecar
         reading as "no deletes" would silently resurrect every deleted
         row (advice finding, round 7)."""
         # schema pin: the sidecar layout (keys + DV_VERSION_COL) is
         # fixed between writes and every write goes through _write_dv,
         # which re-pins it from the content it writes — so reads skip
         # the footer-inference job per merge (round 13, guide §1/§6)
-        for p in (self._dv_path, f"{self._dv_path}__old"):
-            try:
-                return fsio.read_pinned(self.spark, self._dv_path, p)
-            except AnalysisException as exc:
-                if fsio.is_absent(exc):
-                    continue
+        try:
+            return fsio.read_pinned(self.spark, self._dv_path)
+        except AnalysisException as exc:
+            if not fsio.is_absent(exc):
                 raise
-        return None
+        if not fsio.recover_dir(self.spark, self._dv_path):
+            return None
+        return fsio.read_pinned(self.spark, self._dv_path)
 
     def _anti_dv(self, df: DataFrame) -> DataFrame:
         """``df`` minus rows whose key has a delete-vector entry
@@ -1250,64 +1245,24 @@ class KeyedTable:
         return s.join(d, cond, "left_anti")
 
     def _write_dv(self, dv: DataFrame | None) -> None:
-        """Replace the sidecar with ``dv`` (None/empty -> remove it) via
-        write-then-SWAP (the ``rewrite`` convention): a plain overwrite
-        clears the destination before the job commits, so a crash
-        mid-write would silently destroy every accumulated entry — and
-        a lost sidecar reads as "no deletes", resurrecting every
-        deleted row (review finding, round 7).  The new content is
-        pinned with an eager localCheckpoint first — it is derived from
-        the old sidecar's files, and the swap deletes them.
-
-        The swap itself renames the OLD sidecar aside (``__dv__old``)
-        before renaming the new one in, deleting the backup only after
-        the rename commits — a delete-then-rename swap still had a
-        crash window in which the sidecar is simply GONE (advice
-        finding, round 7).  _read_dv falls back to the backup, so every
-        crash point leaves a readable committed state.  The remove path
-        (None/empty) deletes the backup too: a stale backup surviving a
-        reset would resurrect cleared DELETE entries and hide live
-        rows."""
-        fs, _, jvm = self._fs_and_path(self.path)
-        p = jvm.org.apache.hadoop.fs.Path(self._dv_path)
-        p_bak = jvm.org.apache.hadoop.fs.Path(f"{self._dv_path}__old")
-        # remove paths delete the BACKUP first: the reverse order has a
-        # crash window with only the stale backup left, and _read_dv
-        # would fall back to it — resurrecting cleared DELETE entries
-        if dv is None:
+        """Replace the sidecar with ``dv`` (None/empty -> drop it)
+        through ``fsio.replace_dir``/``drop_dir``: a plain overwrite
+        clears the destination before the job commits, and a lost
+        sidecar reads as "no deletes", resurrecting every deleted row
+        (review finding, round 7).  The content is pinned with an eager
+        localCheckpoint for the emptiness decision, so the write does
+        not recompute it."""
+        pinned = None if dv is None else dv.localCheckpoint(eager=True)
+        if pinned is None or pinned.limit(1).isEmpty():
             fsio.unpin(self._dv_path)
-            if fs.exists(p_bak):
-                fs.delete(p_bak, True)
-            if fs.exists(p):
-                fs.delete(p, True)
-            return
-        pinned = dv.localCheckpoint(eager=True)
-        if pinned.limit(1).isEmpty():
-            fsio.unpin(self._dv_path)
-            if fs.exists(p_bak):
-                fs.delete(p_bak, True)
-            if fs.exists(p):
-                fs.delete(p, True)
+            fsio.drop_dir(self.spark, self._dv_path)
             return
         # the content being written defines the next reads' schema
         fsio.pin(self._dv_path, pinned.schema)
-        tmp = f"{self._dv_path}__tmp"
-        pinned.coalesce(1).write.mode("overwrite").parquet(tmp)
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        if not fs.exists(p) and fs.exists(p_bak):
-            # backup-only recovery state (crash between a prior swap's
-            # two renames): PROMOTE the backup — it is the committed
-            # state — before the normal swap; deleting it as a mere
-            # leftover here would open a no-sidecar-at-all crash window
-            # (review finding, round 8)
-            fs.rename(p_bak, p)
-        if fs.exists(p_bak):      # true leftover (primary exists: it wins)
-            fs.delete(p_bak, True)
-        if fs.exists(p):
-            fs.rename(p, p_bak)   # old state stays readable throughout
-        fs.rename(p_tmp, p)
-        if fs.exists(p_bak):
-            fs.delete(p_bak, True)
+        fsio.replace_dir(
+            self.spark, self._dv_path,
+            lambda tmp: pinned.coalesce(1).write.mode("overwrite")
+            .parquet(tmp))
 
     # -- delta-log sidecar (merge-on-read UPSERTS, round-10 headline) ------
     def _read_delta(self, buckets: Sequence[int] | None = None,
@@ -1325,11 +1280,11 @@ class KeyedTable:
         probed VALUE's log entry lives in its KEY's bucket, which the
         value-derived candidate set knows nothing about — they read
         whole (debt-bounded, reclaimed by ``fold_deltas``).
-        No backup swap is needed here (contrast ``_read_dv``): batches
-        APPEND — the parquet job commit either lands a batch's files
-        whole or not at all, and never touches prior entries; the only
-        destructive op, the fold's clear, renames the whole log aside
-        first (``_drop_delta``).
+        The log is never replaced, so an absent log needs no
+        ``recover_dir``: batches APPEND — the parquet job commit either
+        lands a batch's files whole or not at all, and never touches
+        prior entries; the only destructive op, the fold's clear, is
+        one ``fsio.drop_dir`` (``_drop_delta``).
 
         VERSIONED tables: ``vers`` (required there — every caller knows
         its window from the manifest) selects the _delta_ver partition
@@ -1512,33 +1467,15 @@ class KeyedTable:
         # backlog (one redundant fold next sweep — which heals the
         # watermark, see fold_deltas), never hides one.
         #
-        # The clear itself is rename-THEN-delete, not a bare recursive
-        # delete: a delete removes files one at a time, and a crash
-        # that took the newest batch's file but left an older one would
-        # RESURRECT the older entry as the key's winner over the
-        # just-folded base value — which the next fold would then fold
-        # in, silently regressing the newer write (review finding,
-        # round 10; the same crash class _write_dv's swap closes).
-        # One rename makes the whole log invisible atomically; readers
-        # never look at the __dropping name, so a crash mid-delete of
-        # the renamed dir is invisible and cleaned on the next drop.
+        # The clear is ``fsio.drop_dir`` (rename, then delete), not a
+        # bare recursive delete: a crash that took the newest batch's
+        # file but left an older one would RESURRECT the older entry
+        # as the key's winner over the just-folded base value (review
+        # finding, round 10).  A rename that fails raises OSError, so
+        # the caller's meta save never persists a folded watermark over
+        # a still-live log.
         self.delta_folded_seq = self.delta_seq
-        fs, p, jvm = self._fs_and_path(self._delta_path)
-        drop = jvm.org.apache.hadoop.fs.Path(
-            f"{self._delta_path}__dropping")
-        if fs.exists(drop):            # leftover from a crashed drop
-            fs.delete(drop, True)
-        if fs.exists(p):
-            if not fs.rename(p, drop):
-                # Hadoop FS reports several rename failures by RETURNING
-                # false (HDFS posture).  Proceeding would persist a
-                # folded watermark over a still-live log — the backlog
-                # signal would under-report until new batches arrive
-                # (review finding, round 10).  Raise: the caller's meta
-                # save never runs, the fold retries next sweep.
-                raise OSError(
-                    f"could not rename the delta log aside: {p}")
-            fs.delete(drop, True)
+        fsio.drop_dir(self.spark, self._delta_path)
 
     def _hide_tombstones(self, df: DataFrame,
                          buckets: Sequence[int] | None = None,
@@ -2458,8 +2395,9 @@ class KeyedTable:
                 sort_within: Sequence[str | Column] = (),
                 max_records_per_file: int | None = None) -> None:
         """Full rewrite that is safe when ``df`` reads from this table's own
-        path (e.g. schema evolution): write to a temp dir, then swap.
-        Spark cannot overwrite a path it is concurrently reading from.
+        path (e.g. schema evolution): the new table, sidecars included,
+        commits through ``fsio.replace_dir``.  Spark cannot overwrite a
+        path it is concurrently reading from.
         Tombstone-mode callers: derive ``df`` from snapshot_for_rewrite(),
         not read(), or the rewrite loses the delete markers."""
         self._bump_table_version()   # voids any bloom sidecar (fail-open)
@@ -2500,7 +2438,6 @@ class KeyedTable:
                 "schema": bucketed.schema.json()})
             self._save_manifest(entries)
             return
-        tmp = f"{self.path}__tmp_rewrite"
         shaped = bucketed.repartition(self.BUCKET_COL)
         if sort_within:
             # Lead with the bucket column: the parquet writer requires rows
@@ -2513,24 +2450,30 @@ class KeyedTable:
             # contiguous range of sort_within — the zone-map layout
             writer = writer.option("maxRecordsPerFile",
                                    int(max_records_per_file))
-        writer.parquet(tmp)
-        fs, p_old, jvm = self._fs_and_path(self.path)
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        if fs.exists(p_old):
-            fs.delete(p_old, True)
-        fs.rename(p_tmp, p_old)
-        self._save_schema(bucketed)
+        if self.delta_upserts:
+            # the tmp write materializes the folded view, so the swap
+            # commits the folded watermark with the data
+            self.delta_folded_seq = self.delta_seq
+
+        def write(tmp):
+            writer.parquet(tmp)
+            # the sidecars ride the swap: a rebucket's new count lands
+            # atomically with the data it hashed
+            fsio.write_text(self.spark, f"{tmp}/_schema.json",
+                            bucketed.schema.json())
+            fsio.write_text(self.spark, f"{tmp}/_meta.json",
+                            self._meta_text())
+
+        fsio.replace_dir(self.spark, self.path, write)
+        for name in ("_schema.json", "_meta.json"):
+            self._sidecar_cache.pop(f"{self.path}/{name}", None)
         if self.delta_upserts:
             # AFTER the swap (dropping before it would lose the log's
-            # changes if the swap never committed): the tmp write above
-            # already materialized the folded view.  Crash window
+            # changes if the swap never committed).  Crash window
             # between swap and drop: the stale log re-applies winner
-            # rows identical to the folded base (converges) — or, after
-            # a schema evolution, fails loudly on the column mismatch
-            # until the rewrite is re-run; never silent wrongness.
-            # Before the meta save, so the folded watermark rides it.
+            # rows identical to the folded base (converges), and the
+            # next append re-arms the fold gate that clears it.
             self._drop_delta()
-        self._save_meta()
 
     def file_stats(self) -> dict[int, int]:
         """``{bucket: data-file count}`` from a pure filesystem listing —
@@ -3033,10 +2976,10 @@ class KeyedTable:
     def rebucket(self, new_num_buckets: int) -> None:
         """Re-hash the table into a different bucket count (scale-out op:
         a table that grew 100x needs more buckets so each stays
-        executor-sized).  Full rewrite via temp-dir swap; the new count is
-        persisted in the table's meta sidecar, so every future reader and
-        merger — whatever bucket count its constructor guessed — uses the
-        stored value.  Without that persistence a mis-configured merger
+        executor-sized).  Full rewrite; the new count is persisted in the
+        table's meta sidecar, which swaps in with the data, so every
+        future reader and merger — whatever bucket count its
+        constructor guessed — uses the stored value.  Without that persistence a mis-configured merger
         would prune against the wrong bucket ids and silently duplicate
         keys."""
         df = self.snapshot_for_rewrite()
@@ -3702,11 +3645,7 @@ class KeyedTable:
             # and clean a crashed drop's leftover: a table that stops
             # receiving upserts after the crash would otherwise keep a
             # full orphaned copy of the log on disk forever
-            fs, _, jvm = self._fs_and_path(self._delta_path)
-            drop = jvm.org.apache.hadoop.fs.Path(
-                f"{self._delta_path}__dropping")
-            if fs.exists(drop):
-                fs.delete(drop, True)
+            fsio.recover_dir(self.spark, self._delta_path)
             return 0
         # The checkpoint below is LAZY (round 14): it materializes
         # inside the bucket collect that follows it — one action

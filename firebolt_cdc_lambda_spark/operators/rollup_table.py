@@ -75,10 +75,7 @@ class RollupTable:
         """Hadoop-FS existence check — works on object stores, unlike
         driver-local ``os.path`` (which would force a full re-init of the
         rollup every batch on S3/HDFS roots)."""
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(self.path)
-        return p.getFileSystem(hconf).exists(p)
+        return fsio.exists(self.spark, self.path)
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path).drop(self.BUCKET_COL)

@@ -198,6 +198,9 @@ class Scd2Table:
         import json
 
         text = fsio.read_text(self.spark, f"{self.path}/{self.META}")
+        if text is None and fsio.recover_dir(self.spark, self.path):
+            # a crashed rewind's backup
+            text = fsio.read_text(self.spark, f"{self.path}/{self.META}")
         if text is None:
             return
         meta = json.loads(text)
@@ -217,10 +220,11 @@ class Scd2Table:
         self.delete_values = list(meta.get("delete_values",
                                            self.delete_values))
 
-    def _save_meta(self) -> None:
+    def _save_meta(self, root: str | None = None) -> None:
         import json
 
-        fsio.write_text(self.spark, f"{self.path}/{self.META}", json.dumps({
+        root = root or self.path
+        fsio.write_text(self.spark, f"{root}/{self.META}", json.dumps({
             "keys": self.keys, "order": self.order,
             "tracked": self.tracked, "num_buckets": self.num_buckets,
             "op_col": self.op_col, "delete_values": self.delete_values}))
@@ -254,16 +258,16 @@ class Scd2Table:
             F.pmod(F.xxhash64(*[F.col(k) for k in self.keys]),
                    F.lit(self.num_buckets)))
 
-    def _write(self, dim: DataFrame) -> None:
-        # init and rewind must be a STATIC overwrite (wipe the whole
-        # path — a dynamic one would leave stale buckets from any prior
-        # table there); apply replaces only the buckets it wrote
-        # (fsio.overwrite_partitions).
+    def _write(self, dim: DataFrame, path: str) -> None:
+        # init must be a STATIC overwrite (wipe the whole path — a
+        # dynamic one would leave stale buckets from any prior table
+        # there); rewind writes replace_dir's fresh tmp dir; apply
+        # replaces only the buckets it wrote (fsio.overwrite_partitions).
         (self._with_bucket(dim).repartition(self.BUCKET_COL)
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "static")
          .partitionBy(self.BUCKET_COL)
-         .parquet(self.path))
+         .parquet(path))
 
     def init(self, history: DataFrame) -> None:
         """Bootstrap from a full change history.  As the table's reset
@@ -273,7 +277,7 @@ class Scd2Table:
         for attr, val in self._ctor.items():
             setattr(self, attr, val)
         self._write(scd2_snapshot(self._prep(history), self.keys,
-                                  self.order, self._tracked_eff))
+                                  self.order, self._tracked_eff), self.path)
         self._save_meta()
 
     def has_data(self) -> bool:
@@ -355,11 +359,13 @@ class Scd2Table:
         true history (``apply`` is deterministic in state + batches) —
         pinned end-to-end in tests/test_pipeline.py.
 
-        Full-table scan + STATIC rewrite: an incident tool, not a
-        cadence op — and static is load-bearing, not defensive: a key
-        excised entirely leaves its bucket dir needing truncation,
-        which a dynamic overwrite would skip (the vanished-group class
-        of bug pinned on RollupTable.init, round 11)."""
+        Full-table scan + whole-table rewrite through
+        ``fsio.replace_dir``: an incident tool, not a cadence op — and
+        whole-table is load-bearing, not defensive: a key excised
+        entirely leaves its bucket dir needing truncation, which a
+        dynamic overwrite would skip (the vanished-group class of bug
+        pinned on RollupTable.init, round 11).  The old files stay in
+        place until the swap, so the plan reading them needs no pin."""
         dim = self.read()
         to_type = dict(dim.dtypes)["valid_from"]
         kept = dim.where(
@@ -373,15 +379,17 @@ class Scd2Table:
                            .otherwise(F.col("valid_to")))
                .withColumn("is_current", F.col("__rn") == 1)
                .drop("__rn"))
-        # pin before the overwrite replaces the files the plan reads
-        out = out.localCheckpoint(eager=True)
-        self._write(out)
-        # the static overwrite wiped the whole path INCLUDING the
-        # _scd2_meta.json sidecar; re-save it (mirroring init) or a
-        # later handle silently falls back to its constructor
-        # num_buckets/op_col/tracked — mis-bucketed dynamic applies
-        # would then fork per-key histories, the exact hazard the
-        # sidecar guards.  Unlike init, rewind is NOT a
-        # reconfiguration point: it saves the STORED definition
-        # (self.* already reflects the loaded sidecar).
-        self._save_meta()
+
+        def write(tmp):
+            self._write(out, tmp)
+            # the swap replaces the whole path INCLUDING the
+            # _scd2_meta.json sidecar; without it a later handle
+            # silently falls back to its constructor num_buckets/
+            # op_col/tracked — mis-bucketed dynamic applies would then
+            # fork per-key histories, the exact hazard the sidecar
+            # guards.  Unlike init, rewind is NOT a reconfiguration
+            # point: it saves the STORED definition (self.* already
+            # reflects the loaded sidecar).
+            self._save_meta(tmp)
+
+        fsio.replace_dir(self.spark, self.path, write)

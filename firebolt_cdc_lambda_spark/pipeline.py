@@ -438,11 +438,8 @@ class CdcPipeline:
         pushed-down marker-column scan, so a clean fleet sweep costs
         metadata + one pruned scan per table, never a rewrite).  Run
         on the maintenance cadence, alongside ledger GC and rebucket."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return False
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.tombstones:
+        target = self._resolve_target(table, "tombstones")
+        if target is None:
             return False
         return target.purge_tombstones(before_version=before_version,
                                        version_col=self.version_col)
@@ -454,11 +451,8 @@ class CdcPipeline:
         purge_tombstones, same cadence).  Returns #buckets rewritten
         (0: table unconfigured / absent / not DV-mode / nothing to
         fold)."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return 0
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.delete_vectors:
+        target = self._resolve_target(table, "delete_vectors")
+        if target is None:
             return 0
         return target.fold_delete_vectors(before_version=before_version)
 
@@ -468,11 +462,8 @@ class CdcPipeline:
         fold_delete_vectors, same cadence slot).  Returns #buckets
         rewritten (0: table unconfigured / absent / not delta-mode /
         empty log)."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return 0
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.delta_upserts:
+        target = self._resolve_target(table, "delta_upserts")
+        if target is None:
             return 0
         return target.fold_deltas()
 
@@ -514,11 +505,8 @@ class CdcPipeline:
         the batch-order gate drops same-event-time corrected rows),
         pinned end-to-end in
         tests/test_pipeline.py::test_scd2_incident_loop_reconstructs_history."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return None
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.versioned:
+        target = self._resolve_target(table, "versioned")
+        if target is None:
             return None
         new_v = target.restore(version, materialize=materialize,
                                restore_schema=restore_schema)
@@ -541,11 +529,8 @@ class CdcPipeline:
         operator drives directly (or through a second pipeline rooted
         elsewhere).  Source maintenance hazard + the materialize
         escape are documented on KeyedTable.clone."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return None
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.versioned:
+        target = self._resolve_target(table, "versioned")
+        if target is None:
             return None
         return target.clone(dest_path, as_of=as_of,
                             materialize=materialize)
@@ -570,11 +555,8 @@ class CdcPipeline:
         append produced (a file-count gate would cross after a single
         ~30-key batch — review finding, round 10).  0: unconfigured /
         absent / not delta-mode / nothing unfolded."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return 0
-        target = self.target_for(table, keys)
-        if not target.delta_upserts or not target.exists():
+        target = self._resolve_target(table, "delta_upserts")
+        if target is None:
             return 0
         return max(0, target.delta_seq - target.delta_folded_seq)
 
@@ -611,14 +593,19 @@ class CdcPipeline:
         res = StatsIndex.refresh_many(target, list(target.stats_columns))
         return [c for c, buckets in res.items() if buckets]
 
-    def _resolve_target(self, table: str):
+    def _resolve_target(self, table: str, mode: str | None = None):
         """Resolve-keys + exists prologue every maintenance hook
-        shares (None: table unconfigured or absent) — one copy so the
-        cadence hooks cannot diverge (review findings, rounds 8+9)."""
+        shares (None: table unconfigured or absent, or its ``mode``
+        flag — ``"versioned"``, ``"delta_upserts"``, ... — is off) —
+        one copy so the cadence hooks cannot diverge (review findings,
+        rounds 8+9).  The flag, read from the stored meta, is checked
+        first: a table of another mode costs no existence probe."""
         keys = self.table_keys.resolve(table)
         if keys is None:
             return None
         target = self.target_for(table, keys)
+        if mode is not None and not getattr(target, mode):
+            return None
         return target if target.exists() else None
 
     def purge_versions(self, table: str, keep_last: int = 1,
@@ -635,11 +622,8 @@ class CdcPipeline:
         REFUSES (raises) — under the fleet sweep's per-table try, that
         skips this table's GC for the sweep and records the failure,
         never strands the fork silently."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return False
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.versioned:
+        target = self._resolve_target(table, "versioned")
+        if target is None:
             return False
         target.purge_versions(keep_last=keep_last,
                               check_clones=check_clones)
@@ -655,11 +639,8 @@ class CdcPipeline:
         ``compactable_files`` (the packable-run count) exactly as
         dead_ratio gates version GC.  None: table unconfigured or
         absent."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return None
-        target = self.target_for(table, keys)
-        if not target.exists():
+        target = self._resolve_target(table)
+        if target is None:
             return None
         return target.compact(target_bytes=target_bytes,
                               small_bytes=small_bytes)
@@ -696,11 +677,8 @@ class CdcPipeline:
         Pass the compact cadence's ``compact_target_bytes`` so the
         ``compactable_files`` count splits runs exactly as that
         compact() will.  None: table unconfigured or absent."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return None
-        target = self.target_for(table, keys)
-        if not target.exists():
+        target = self._resolve_target(table)
+        if target is None:
             return None
         return target.health_report(
             small_file_bytes=small_file_bytes,

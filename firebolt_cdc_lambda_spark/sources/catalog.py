@@ -14,13 +14,19 @@ import os
 
 from pyspark.sql import types as T
 
+from .. import fsio
+
 
 def list_tables(warehouse_root: str) -> list[str]:
+    """Dirs holding a ``_schema.json``, minus the sibling dirs a table
+    swap passes through (``fsio.SWAP_SUFFIXES``): a crashed rewrite
+    leaves a complete table, sidecars included, under those names."""
     if not os.path.isdir(warehouse_root):
         return []
     return sorted(
         name for name in os.listdir(warehouse_root)
         if os.path.isfile(os.path.join(warehouse_root, name, "_schema.json"))
+        and not name.endswith(fsio.SWAP_SUFFIXES)
     )
 
 

@@ -11,7 +11,7 @@ probabilistic 30-day GC (AUTOMATIC_CLEANUP.md:10-63).
 Two layouts (round 12):
 
 * **flat** (default) — loose parquet files, one appended per record;
-  GC and ``forget`` rewrite the whole ledger via temp-dir-and-swap.
+  GC and ``forget`` rewrite the whole ledger via ``fsio.replace_dir``.
   Right for the reference's scale (~300k rows steady state).
 * **day-partitioned** (``partition_by_day=True``) — rows land under
   ``_pday=YYYYMMDD`` dirs keyed by ``processed_at``.  GC becomes a pure
@@ -63,17 +63,16 @@ class FileLedger:
         self.partition_by_day = partition_by_day
 
     # -- filesystem helpers -------------------------------------------------
-    def _fs(self):
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(self.path)
-        return p.getFileSystem(hconf), p, jvm
-
     def _root_names(self) -> list[str]:
-        fs, root, _ = self._fs()
-        if not fs.exists(root):
-            return []
-        return [st.getPath().getName() for st in fs.listStatus(root)]
+        return fsio.list_names(self.spark, self.path)
+
+    def _recover_days(self, names: list[str]) -> None:
+        """Finish crashed per-day swaps of ``forget`` (``_read`` hides a
+        day's swap siblings, so until then that day reads as absent)."""
+        for n in names:
+            if n.startswith(f"{PDAY_COL}=") and n.endswith("__old"):
+                fsio.recover_dir(self.spark,
+                                 f"{self.path}/{n.removesuffix('__old')}")
 
     def _flat_data_files(self) -> list[str]:
         return [n for n in self._root_names()
@@ -97,47 +96,50 @@ class FileLedger:
             schema = T.StructType(
                 list(LEDGER_SCHEMA.fields)
                 + [T.StructField(PDAY_COL, T.StringType())])
+        reader = self.spark.read.schema(schema).option("basePath", self.path)
         try:
-            df = (self.spark.read.schema(schema)
-                  .option("basePath", self.path).parquet(self.path))
+            df = reader.parquet(self.path)
         except AnalysisException as exc:
-            # only a verifiably-absent ledger is "empty"; a real read
-            # error re-raises (reading it as empty would answer
-            # is_processed=False and replay files — harmless only
-            # because merges are idempotent, but the error belongs to
-            # the caller).  Same contract as KeyedTable._read_raw.
+            # only an absent ledger with no swap backup to promote is
+            # "empty"; a real read error re-raises (reading it as empty
+            # would answer is_processed=False and replay files —
+            # harmless only because merges are idempotent, but the
+            # error belongs to the caller).  Same contract as
+            # KeyedTable._read_raw.
             if not fsio.is_absent(exc):
                 raise
-            df = self.spark.createDataFrame([], schema)
-        if self.partition_by_day and not with_pday:
-            df = df.drop(PDAY_COL)
+            df = (reader.parquet(self.path)
+                  if fsio.recover_dir(self.spark, self.path)
+                  else self.spark.createDataFrame([], schema))
+        if self.partition_by_day:
+            # a day swap's siblings (_pday=D__tmp, __old, __dropping)
+            # are not days; the partition filter prunes their files.
+            # Null: loose flat files a partitioned handle has not
+            # migrated yet.
+            day = F.col(PDAY_COL)
+            df = df.where(day.isNull() | ~day.contains("__"))
+            if not with_pday:
+                df = df.drop(PDAY_COL)
         return df
 
     def _rewrite_kept(self, kept) -> None:
-        """Replace the ledger with ``kept`` via temp-dir-and-swap (the
-        ``KeyedTable.rewrite`` shape): write the survivors to a sibling
-        temp dir, then delete-old + rename-in.  The old cache→count→
+        """Replace the ledger with ``kept`` through ``fsio.replace_dir``
+        (the ``KeyedTable.rewrite`` shape).  The old cache→count→
         overwrite-in-place pattern could lose the ENTIRE ledger if an
         executor was lost mid-overwrite (recomputation re-reads source
-        files the overwrite already deleted); with the swap, the only
-        crash window (between delete and rename) leaves the ledger
-        verifiably absent — files replay as idempotent no-ops, never a
-        partial recomputation.  Under partition_by_day the survivors
-        are re-laid-out into ``_pday=`` dirs (this is also the one-time
-        flat→partitioned migration path)."""
-        tmp = f"{self.path}__tmp"
+        files the overwrite already deleted); the swap leaves the
+        source files in place until the survivors are written, and
+        every crash point reads as the old or the new ledger.  Under
+        partition_by_day the survivors are re-laid-out into ``_pday=``
+        dirs (this is also the one-time flat→partitioned migration
+        path)."""
         kept = kept.select(*[f.name for f in LEDGER_SCHEMA.fields])
         w = kept.write.mode("overwrite")
         if self.partition_by_day:
             w = (kept.withColumn(PDAY_COL, F.date_format(
                     "processed_at", _PDAY_FMT))
                  .write.mode("overwrite").partitionBy(PDAY_COL))
-        w.parquet(tmp)
-        fs, p_old, jvm = self._fs()
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        if fs.exists(p_old):
-            fs.delete(p_old, True)
-        fs.rename(p_tmp, p_old)
+        fsio.replace_dir(self.spark, self.path, w.parquet)
 
     # -- the reference surface ------------------------------------------------
     def is_processed(self, file_key: str) -> bool:
@@ -187,13 +189,11 @@ class FileLedger:
         one bad day-dir, e.g. ``fair/orders/2024/01/05/``).  Returns
         the number of rows dropped; 0 skips the rewrite entirely.
 
-        Flat layout: one temp-dir-and-swap of the survivors.  Day-
+        Flat layout: one ``fsio.replace_dir`` of the survivors.  Day-
         partitioned layout: ONLY the ``_pday=`` dirs containing dropped
-        rows are rewritten (per-day swap; a fully-forgotten day's dir
-        is deleted outright) — the incident's cost is O(touched days),
-        not O(ledger).  Either way the ledger is observability + batch
-        idempotency and merges are idempotent, so a crash window
-        degrades safe (files replay as no-ops), never wrong."""
+        rows are rewritten (per-day ``replace_dir``; a fully-forgotten
+        day's dir goes through ``drop_dir``) — the incident's cost is
+        O(touched days), not O(ledger)."""
         if file_keys is None and prefix is None:
             raise ValueError(
                 "forget() needs file_keys and/or prefix (to drop the "
@@ -225,6 +225,7 @@ class FileLedger:
             # pre-migration flat ledger under a partitioned handle:
             # migrate first so the day-scoped path below is sound
             self._maybe_migrate()
+        self._recover_days(self._root_names())
         df = self._read(with_pday=True)
         dropped = df.where(drop)
         n = dropped.count()
@@ -235,19 +236,15 @@ class FileLedger:
         days = sorted(r[0] for r in
                       dropped.select(PDAY_COL).distinct().collect()
                       if r[0] is not None)
-        fs, _, jvm = self._fs()
         for day in days:
             daydir = f"{self.path}/{PDAY_COL}={day}"
             kept_day = (df.where(F.col(PDAY_COL) == day).where(~drop)
                         .select(*[f.name for f in LEDGER_SCHEMA.fields]))
-            p_day = jvm.org.apache.hadoop.fs.Path(daydir)
             if kept_day.limit(1).isEmpty():
-                fs.delete(p_day, True)
-                continue
-            tmp = f"{self.path}__tmp_day"
-            kept_day.write.mode("overwrite").parquet(tmp)
-            fs.delete(p_day, True)
-            fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), p_day)
+                fsio.drop_dir(self.spark, daydir)
+            else:
+                fsio.replace_dir(self.spark, daydir,
+                                 kept_day.write.mode("overwrite").parquet)
         return n
 
     def maybe_cleanup(self, force: bool = False) -> None:
@@ -262,12 +259,12 @@ class FileLedger:
             tzinfo=None) - _dt.timedelta(days=self.days_to_keep)
         if self.partition_by_day and not self._flat_data_files():
             cutoff_day = cutoff.strftime("%Y%m%d")
-            fs, _, jvm = self._fs()
             pfx = f"{PDAY_COL}="
-            for name in self._root_names():
+            names = self._root_names()
+            self._recover_days(names)
+            for name in names:
                 if name.startswith(pfx) and name[len(pfx):] < cutoff_day:
-                    fs.delete(jvm.org.apache.hadoop.fs.Path(
-                        f"{self.path}/{name}"), True)
+                    fsio.drop_dir(self.spark, f"{self.path}/{name}")
             return
         self._rewrite_kept(
             self._read().where(F.col("processed_at") >= F.lit(cutoff)))

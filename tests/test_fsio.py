@@ -1,9 +1,15 @@
-"""Guard that keeps dynamic partition overwrites and the absent-dataset
-whitelist on their ``fsio`` helpers."""
+"""The ``fsio`` directory swap under every crash state, and guards that
+keep dynamic partition overwrites, directory renames and the
+absent-dataset whitelist on their ``fsio`` helpers."""
 
+import os
 import pathlib
+import shutil
+
+import pytest
 
 import firebolt_cdc_lambda_spark
+from firebolt_cdc_lambda_spark import fsio
 
 
 def test_dynamic_overwrites_and_read_errors_only_through_fsio():
@@ -27,3 +33,116 @@ def test_dynamic_overwrites_and_read_errors_only_through_fsio():
                 stray.append(f"{rel}:{n}: {line.strip()}")
             prev = line
     assert stray == []
+
+
+def test_directory_renames_only_through_fsio():
+    """A hand-written rename is a hand-written swap or drop: every
+    whole-directory replace commits through ``fsio.replace_dir`` and
+    every drop through ``fsio.drop_dir``, whose crash states
+    ``fsio.recover_dir`` knows.  The one exemption is the per-file
+    ``_add`` of ``KeyedTable._recover_compact``: compaction swaps
+    files, not directories, and rolls its intent forward."""
+    pkg = pathlib.Path(firebolt_cdc_lambda_spark.__file__).parent
+    stray = []
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        if rel == "fsio.py":
+            continue
+        defs = []
+        for n, line in enumerate(f.read_text().splitlines(), 1):
+            if line.lstrip().startswith("def "):
+                defs.append(line.split("def ", 1)[1].split("(", 1)[0])
+            if ".rename(" in line and not (
+                    rel == "operators/merge.py"
+                    and defs[-2:] == ["_recover_compact", "_add"]):
+                stray.append(f"{rel}:{n}: {line.strip()}")
+    assert stray == []
+
+
+def _put(spark, d, text):
+    fsio.write_text(spark, f"{d}/v.txt", text)
+
+
+def _get(spark, d):
+    return fsio.read_text(spark, f"{d}/v.txt")
+
+
+def test_replace_dir_crash_states(spark, tmp_path):
+    """Every crash point of the swap reads as the old or the new state:
+    A (only ``__old``: between the renames) promotes the backup, B
+    (both: before the backup delete) keeps the new dir and deletes the
+    backup, and a ``__dropping`` leftover is deleted."""
+    p = str(tmp_path / "d")
+    old, tmp, dropping = p + "__old", p + "__tmp", p + "__dropping"
+    fsio.replace_dir(spark, p, lambda t: _put(spark, t, "v1"))
+    assert _get(spark, p) == "v1"
+    fsio.replace_dir(spark, p, lambda t: _put(spark, t, "v2"))
+    assert _get(spark, p) == "v2"
+    assert not any(map(os.path.exists, (old, tmp, dropping)))
+    # the callback may read the dir it replaces
+    fsio.replace_dir(spark, p, lambda t: _put(spark, t, _get(spark, p) + "+"))
+    assert _get(spark, p) == "v2+"
+
+    # A: only the backup holds the committed state
+    shutil.move(p, old)
+    assert fsio.recover_dir(spark, p) is True
+    assert _get(spark, p) == "v2+" and not os.path.exists(old)
+    # B: the new dir won, the backup is a leftover
+    shutil.copytree(p, old)
+    _put(spark, old, "stale")
+    assert fsio.recover_dir(spark, p) is False
+    assert _get(spark, p) == "v2+" and not os.path.exists(old)
+    # a crashed drop's leftover is never read, and is deleted
+    shutil.copytree(p, dropping)
+    assert fsio.recover_dir(spark, p) is False
+    assert not os.path.exists(dropping) and _get(spark, p) == "v2+"
+
+    # a swap over state A and a stale __tmp starts from the backup
+    shutil.move(p, old)
+    os.makedirs(tmp)
+    _put(spark, tmp, "garbage")
+    fsio.replace_dir(spark, p, lambda t: _put(spark, t, "v3"))
+    assert _get(spark, p) == "v3"
+    assert not any(map(os.path.exists, (old, tmp, dropping)))
+
+
+def test_drop_dir_removes_the_backup_first(spark, tmp_path):
+    """A dropped dir stays dropped: its backup goes with it (recovery
+    would promote a surviving ``__old`` over the drop), and a crash
+    after the rename leaves only a ``__dropping`` leftover."""
+    p = str(tmp_path / "d")
+    fsio.replace_dir(spark, p, lambda t: _put(spark, t, "v1"))
+    shutil.copytree(p, p + "__old")
+    shutil.copytree(p, p + "__dropping")
+    fsio.drop_dir(spark, p)
+    assert not any(os.path.exists(p + s)
+                   for s in ("", "__old", "__dropping"))
+    assert fsio.recover_dir(spark, p) is False
+    assert not os.path.exists(p)
+    fsio.drop_dir(spark, p)              # dropping nothing is a no-op
+
+
+def test_failed_rename_raises(spark, tmp_path, monkeypatch):
+    """Hadoop reports some rename failures by returning false; the swap
+    must raise instead of deleting the backup of a swap that never
+    happened."""
+    p = str(tmp_path / "d")
+    fsio.replace_dir(spark, p, lambda t: _put(spark, t, "v1"))
+
+    class NoRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            return False
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real = fsio.fs_and_path
+    monkeypatch.setattr(fsio, "fs_and_path", lambda spark, q: (
+        NoRename(real(spark, q)[0]), *real(spark, q)[1:]))
+    with pytest.raises(OSError, match="could not rename"):
+        fsio.replace_dir(spark, p, lambda t: _put(spark, t, "v2"))
+    monkeypatch.undo()
+    assert _get(spark, p) == "v1"

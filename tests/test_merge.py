@@ -219,6 +219,79 @@ def test_rebucket_preserves_data_and_persists_count(spark, tmp_path):
     assert all(got[i] == float(i) for i in range(10, 100))
 
 
+def test_rebucket_crash_between_renames_reads_the_backup(spark, tmp_path):
+    """A crash between the swap's two renames leaves the rebucketed
+    table only at ``<path>__old``, with its ``_meta.json`` inside.  A
+    fresh handle promotes it: every row reads under the STORED bucket
+    count, and the next batch merges instead of bootstrapping the
+    table from that one batch (which would drop the other 90 rows).
+    A crash before the backup delete leaves a complete table, sidecars
+    included, under ``__old``; the catalog must not list it."""
+    import shutil
+
+    from firebolt_cdc_lambda_spark import sqlapi
+    from firebolt_cdc_lambda_spark.config import TableKeys
+    from firebolt_cdc_lambda_spark.pipeline import CdcPipeline
+    from firebolt_cdc_lambda_spark.sources import catalog
+
+    root = str(tmp_path / "wh")
+    path = f"{root}/t"
+    kt = KeyedTable(spark, path, ["id"], num_buckets=4)
+    kt.init(df_of(spark, [Row(id=i, v=float(i)) for i in range(100)]))
+    kt.rebucket(16)
+    shutil.move(path, path + "__old")
+    fresh = KeyedTable(spark, path, ["id"], num_buckets=4)
+    assert fresh.num_buckets == 16
+    assert sorted(r["id"] for r in fresh.read().collect()) == list(range(100))
+
+    pipe = CdcPipeline(spark, root, TableKeys.from_json('{"t": "id"}'),
+                       ledger=False, num_buckets=4)
+    shutil.move(path, path + "__old")
+    res = pipe.process_batch("t", ["id"], df_of(spark, [
+        Row(id=i, v=999.0, Op="U", load_timestamp=TS) for i in range(10)]))
+    assert res.status == "completed"
+    got = {r["id"]: r["v"] for r in pipe.target_for("t", ["id"])
+           .read().collect()}
+    assert len(got) == 100
+    assert all(got[i] == 999.0 for i in range(10))
+    assert pipe.target_for("t", ["id"]).num_buckets == 16
+
+    shutil.copytree(path, path + "__old")
+    assert catalog.list_tables(root) == ["t"]
+    assert set(sqlapi.register_warehouse(spark, root)) == {"t"}
+
+
+def test_commit_merge_pin_fills_before_the_overwrite(spark, tmp_path,
+                                                     monkeypatch):
+    """A delete-bearing commit reads the very buckets its dynamic
+    overwrite replaces: ``out`` must be cached, and the cache filled by
+    the kept-bucket collect, before ``fsio.overwrite_partitions`` runs.
+    A pin that only fills inside the write would re-read files the
+    overwrite is deleting."""
+    from firebolt_cdc_lambda_spark import fsio
+
+    kt = KeyedTable(spark, str(tmp_path / "t"), ["id"], num_buckets=4)
+    kt.init(df_of(spark, [Row(id=i, v=float(i)) for i in range(20)]))
+    filled = []
+    overwrite = fsio.overwrite_partitions
+
+    def check(df, *args, **kwargs):
+        cached = (spark._jsparkSession.sharedState().cacheManager()
+                  .lookupCachedData(df._jdf))
+        filled.append(not cached.isEmpty() and cached.get()
+                      .cachedRepresentation().cacheBuilder()
+                      .isCachedColumnBuffersLoaded())
+        return overwrite(df, *args, **kwargs)
+
+    monkeypatch.setattr(fsio, "overwrite_partitions", check)
+    kt.merge_batch(df_of(spark, [
+        Row(id=1, v=None, Op="D", load_timestamp=TS),
+        Row(id=2, v=9.0, Op="U", load_timestamp=TS)]))
+    assert filled == [True]
+    got = {r["id"]: r["v"] for r in kt.read().collect()}
+    assert 1 not in got and got[2] == 9.0 and len(got) == 19
+
+
 def test_cluster_by_sorts_within_buckets(spark, tmp_path):
     kt = KeyedTable(spark, str(tmp_path / "tz"), ["id"], num_buckets=2)
     import random

@@ -427,3 +427,46 @@ def test_flat_ledger_migrates_to_partitioned(spark, tmp_path):
     assert part.is_processed("k1") and part.is_processed("k3")
     assert not part.is_processed("k2")      # failed is not completed
     assert part._read().count() == 3
+
+
+def test_ledger_swap_crash_states_keep_processed_files(spark, tmp_path):
+    """forget() swaps the ledger (flat) or a day dir (partitioned)
+    through fsio.replace_dir.  A crash between the two renames leaves
+    the committed rows only in the ``__old`` backup: they must still
+    answer is_processed (not read as an absent ledger and replay every
+    file).  A day swap's siblings live INSIDE the ledger root, so
+    readers must not take ``_pday=D__old`` for a day: a stale backup
+    would resurrect forgotten rows."""
+    import os
+    import shutil
+
+    path = str(tmp_path / "flat")
+    flat = FileLedger(spark, path, cleanup_probability=0.0)
+    for k in ("k1", "k2", "k3"):
+        flat.record(k, "completed", processed_at=TS)
+    assert flat.forget(file_keys="k2") == 1
+    shutil.move(path, path + "__old")
+    fresh = FileLedger(spark, path, cleanup_probability=0.0)
+    assert fresh.is_processed("k1") and fresh.is_processed("k3")
+    assert not fresh.is_processed("k2")
+    assert not os.path.exists(path + "__old")
+
+    path = str(tmp_path / "days")
+    led = FileLedger(spark, path, cleanup_probability=0.0,
+                     partition_by_day=True,
+                     days_to_keep=(dt.datetime.now() - TS).days + 30)
+    for k in ("k1", "k2", "k3"):
+        led.record(k, "completed", processed_at=TS)
+    day = f"{path}/_pday=20240101"
+    pre = str(tmp_path / "pre")
+    shutil.copytree(day, pre)                 # the day before the forget
+    assert led.forget(file_keys="k2") == 1
+    shutil.copytree(pre, day + "__old")       # crash state B: the swap
+    assert not led.is_processed("k2")         # committed, and a backup
+    assert led.is_processed("k1")             # is no day of its own
+    shutil.move(day, day + "__tmp")           # crash state A: the swap
+    shutil.rmtree(day + "__old")              # did not commit
+    shutil.move(pre, day + "__old")
+    led.maybe_cleanup(force=True)             # the GC sweep recovers
+    assert all(led.is_processed(k) for k in ("k1", "k2", "k3"))
+    assert not os.path.exists(day + "__old")

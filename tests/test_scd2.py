@@ -257,3 +257,27 @@ def test_scd2_table_rewind_preserves_meta_sidecar(spark, tmp_path):
         _df(spark, [(k, 10, k, "a") for k in range(32)]
             + [(5, 50, 999, "c")]), KEYS, ORDER, TRACKED))
     assert out == want
+
+
+def test_scd2_rewind_crash_between_renames_reads_the_backup(spark, tmp_path):
+    """rewind() swaps the whole table dir, ``_scd2_meta.json`` inside
+    it.  A crash between the swap's two renames leaves the rewound
+    table only at ``<path>__old``: a fresh handle promotes it and sees
+    the stored definition and the rewound history, never an empty
+    table that would route the next batch to init."""
+    import os
+    import shutil
+
+    from firebolt_cdc_lambda_spark.operators.scd2 import Scd2Table
+    p = str(tmp_path / "dim")
+    t = Scd2Table(spark, p, KEYS, ORDER, TRACKED, num_buckets=16)
+    t.init(_df(spark, [(k, 10, k, "a") for k in range(8)]
+               + [(k, 30, 100 + k, "b") for k in range(8)]))
+    t.rewind(30)
+    want = _canon(t.read())
+    assert len(want) == 8
+    shutil.move(p, p + "__old")
+    t2 = Scd2Table(spark, p, KEYS, ORDER, TRACKED, num_buckets=4)
+    assert t2.num_buckets == 16 and t2.has_data()
+    assert _canon(t2.read()) == want
+    assert not os.path.exists(p + "__old")
