@@ -23,12 +23,13 @@ Design (100 TB first):
   JSON sidecar ``_bloom_<col>.json`` holds only {m, k, table_version,
   built, dirty}.
 * **Probing** — the probe values' k bit positions are computed by the
-  SAME Spark expression used at build time (``xxhash64(col, j) mod m``
-  — computing them driver-side would mean reimplementing xxhash64 and
-  praying the arithmetic matches), then broadcast-joined against the
-  words dataset; a bucket is a candidate for a value iff all k of its
-  bits are set.  Cost: two metadata-sized jobs, then the same
-  brace-glob pruned scan ``lookup`` uses.
+  SAME Spark expression used at build time (``xxhash64(col, j) mod m``),
+  then broadcast-joined against the words dataset; a bucket is a
+  candidate for a value iff all k of its bits are set.  Cost: two
+  metadata-sized jobs, then the same brace-glob pruned scan ``lookup``
+  uses.  ``keyhash`` now computes Spark's xxhash64 on the driver for
+  integral and string values (``lookup`` prunes literal keys with it);
+  the probe does not use it yet.
 * **Staleness (fail-open, never wrong)** — merges flag the buckets they
   rewrote as DIRTY in the sidecar (``KeyedTable._mark_index_dirty``,
   riding the commit); dirty buckets are ALWAYS candidates until

@@ -157,13 +157,34 @@ class LshIndex:
         typically ``docs`` minus ``probe`` matches).  Appends accumulate
         small files per shard; a periodic ``build`` over the full corpus
         re-compacts, exactly like KeyedTable's rebucket maintenance."""
+        self._check_doc_type(docs.schema[id_col].dataType)
         self._write(docs, id_col, text_col, "append")
 
     def add_fused(self, fused: DataFrame) -> None:
         """``add`` from precomputed ``fingerprints()`` output — the
         zero-recompute path for gates that already materialized the
         batch's fingerprints."""
+        self._check_doc_type(fused.schema["doc_id"].dataType)
         self._write_fused(fused, "append")
+
+    def _check_doc_type(self, doc_type) -> None:
+        """Raise before an append whose ``doc_id`` type differs from the
+        stored one: both stores' layouts are pinned from what the build
+        wrote, so a mixed-type append would break every later probe."""
+        from pyspark.errors import AnalysisException
+        try:
+            sig = fsio.read_pinned(self.spark, f"{self.path}/sig")
+        except AnalysisException as exc:
+            if fsio.is_absent(exc):
+                return          # nothing built yet: this append types it
+            raise
+        stored = sig.schema["doc_id"].dataType
+        if doc_type != stored:
+            raise ValueError(
+                f"doc_id arrived as {doc_type.simpleString()} but the "
+                f"index at {self.path} stores "
+                f"{stored.simpleString()}: cast the batch's ids, or "
+                "rebuild the index")
 
     # -- probe ------------------------------------------------------------
     def _read_shards(self, store: str, shards: list[int]) -> DataFrame | None:

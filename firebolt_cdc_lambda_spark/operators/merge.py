@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from .. import fsio
 from ..session import AQE_OFF, conf_scope
+from . import keyhash
 from .ordering import CDC_META_COLS, OP_COL
 
 DEFAULT_DELETE_VALUES = ("D",)
@@ -1552,12 +1553,27 @@ class KeyedTable:
         brace-alternation glob the merge path uses; untouched buckets
         are never listed.
 
-        ``keys``: a DataFrame carrying the key columns, or (for literal
-        point lookups) a sequence of scalars (single-column key) /
-        tuples (composite key) — typed from the stored schema.  The key
-        set must be lookup-sized: its distinct buckets are collected on
-        the driver (metadata-bounded, exactly like merge's touched-
+        ``keys``: a sequence of scalars (single-column key) or tuples
+        (composite key), typed from the stored schema, or a DataFrame
+        carrying the key columns.
+
+        Literal keys of integral and string key columns are checked
+        against the stored types the way ``createDataFrame`` checks
+        rows (a value that does not fit its type raises), hashed to
+        their bucket ids on the driver (``keyhash``), and matched by an
+        ``IN`` filter on the pruned read: the lookup is one Spark job,
+        the scan.  Tuples holding a None are dropped (a null key never
+        matches).
+
+        Any other key set — a DataFrame, or literals of another key
+        type — must be lookup-sized: its distinct buckets are collected
+        on the driver (metadata-bounded, exactly like merge's touched-
         bucket list) and the keys broadcast into a semi-join."""
+        nb = self.num_buckets
+        if self.versioned and as_of is not None:
+            # rebucket may have changed the count since that version;
+            # hash with the count in force THEN or pruning misses keys
+            _, nb = self._resolve_epochs(as_of)
         if not isinstance(keys, DataFrame):
             rows = [tuple(k) if isinstance(k, (tuple, list)) else (k,)
                     for k in keys]
@@ -1566,13 +1582,18 @@ class KeyedTable:
                 raise ValueError("lookup on a table with no stored schema")
             from pyspark.sql import types as T
             ktypes = T.StructType([schema[k] for k in self.keys])
+            types = [f.dataType for f in ktypes]
+            if keyhash.hashable(types):
+                verify = T._make_type_verifier(ktypes)
+                for r in rows:
+                    verify(r)
+                probe = {r for r in rows if None not in r}
+                buckets = sorted({keyhash.bucket(r, types, nb)
+                                  for r in probe})
+                return self._read_keyed(buckets, as_of).where(
+                    keyhash.isin_sql(self.keys, types, probe))
             keys = self.spark.createDataFrame(rows, ktypes)
         kdf = self._align_key_types(keys.select(*self.keys)).distinct()
-        nb = self.num_buckets
-        if self.versioned and as_of is not None:
-            # rebucket may have changed the count since that version;
-            # hash with the count in force THEN or pruning misses keys
-            _, nb = self._resolve_epochs(as_of)
         if _buckets is not None and as_of is None:
             # caller already collected the keys' bucket ids in a fused
             # metadata job of its own (JoinView.apply_dim_delta) — skip
@@ -1591,7 +1612,13 @@ class KeyedTable:
                 buckets = [int(r[0]) for r in
                            kdf.select(bcol.alias(self.BUCKET_COL))
                            .distinct().collect()]
-        df = self._hide_tombstones(
+        return self._read_keyed(buckets, as_of).join(
+            F.broadcast(kdf), list(self.keys), "left_semi")
+
+    def _read_keyed(self, buckets: Sequence[int],
+                    as_of: int | None) -> DataFrame:
+        """The live rows of ``buckets``, for a key-scoped read."""
+        return self._hide_tombstones(
             self._read_raw(buckets=buckets, as_of=as_of)
             .drop(self.BUCKET_COL),
             # the lookup is KEY-scoped: the log prunes to the same
@@ -1602,7 +1629,6 @@ class KeyedTable:
             # count this lookup hashed with — rebucket is a "full"
             # boundary, so no window ever spans two counts)
             buckets=buckets, as_of=as_of)
-        return df.join(F.broadcast(kdf), list(self.keys), "left_semi")
 
     def restore(self, version: int, materialize: bool = False,
                 restore_schema: bool = False) -> int:

@@ -31,7 +31,7 @@ def register_warehouse(spark: SparkSession, warehouse_root: str,
     """Create a temp view per KeyedTable snapshot in a warehouse dir."""
     from .operators.merge import KeyedTable
     names = []
-    for t in catalog.list_tables(warehouse_root):
+    for t in catalog.list_tables(warehouse_root, spark):
         name = f"{prefix}{t}"
         # keys aren't needed for reading; reuse the sidecar-aware reader
         kt = KeyedTable(spark, f"{warehouse_root}/{t}", keys=[])

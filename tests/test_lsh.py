@@ -197,3 +197,23 @@ def test_self_dedup_no_dups_is_identity(spark, tmp_path):
     ix = LshIndex(spark, str(tmp_path / "lsh_sd2"), n_shards=8)
     _, _, novel = _batch(spark, docs)
     assert ix.self_dedup(novel).count() == novel.count()
+
+
+def test_append_of_another_doc_id_type_raises_before_writing(spark,
+                                                             tmp_path):
+    """The stores' layout is fixed by the build: an append whose doc_id
+    type differs is rejected before any file is written."""
+    import pytest
+    ix = LshIndex(spark, str(tmp_path / "lsh"), n_shards=4)
+    ix.build(_docs(spark).limit(40))
+    files = sorted(p for p in (tmp_path / "lsh").rglob("*") if p.is_file())
+    _, _, novel = _batch(spark, _docs(spark))
+    wrong = novel.selectExpr("CAST(doc_id AS STRING) AS doc_id", "text")
+    with pytest.raises(ValueError, match="doc_id arrived as string"):
+        ix.add(wrong)
+    with pytest.raises(ValueError, match="doc_id arrived as string"):
+        ix.add_fused(ix.fingerprints(wrong))
+    assert sorted(p for p in (tmp_path / "lsh").rglob("*")
+                  if p.is_file()) == files
+    ix.add(novel)                           # the build's type still appends
+    assert ix.probe(novel).count() == 5

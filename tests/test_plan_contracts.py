@@ -407,3 +407,27 @@ def test_commit_merge_shuffle_sized_to_touched_buckets(
     for f in files:
         per_dir[f.parent] = per_dir.get(f.parent, 0) + 1
     assert max(per_dir.values()) == 1
+
+
+def _job_ids(spark) -> set:
+    jobs = spark._jsparkSession.sparkContext().statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+@pytest.mark.parametrize("keys, probe, hits", [
+    (["id"], [5, 77, 123, 5, 99999], 3),
+    (["id", "n"], [(5, 5), (77, 0), (123, 4), (9, None), (9, 1)], 3)],
+    ids=["long", "long-int"])
+def test_literal_lookup_is_one_job(spark, tmp_path, keys, probe, hits):
+    """A literal-key lookup computes its bucket ids on the driver and
+    filters the pruned read with an isin: the scan is its only Spark
+    job (no bucket collect, no broadcast of a key frame)."""
+    from firebolt_cdc_lambda_spark.operators.merge import KeyedTable
+    kt = KeyedTable(spark, str(tmp_path / "t"), keys, num_buckets=64,
+                    tombstones=True)
+    kt.init(spark.range(2000).selectExpr(
+        "id", "CAST(id % 7 AS INT) AS n", "'x' AS v"))
+    before = _job_ids(spark)
+    got = kt.lookup(probe).collect()
+    assert len(_job_ids(spark) - before) == 1
+    assert len(got) == hits

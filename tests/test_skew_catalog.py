@@ -60,6 +60,35 @@ def test_catalog_empty_root(tmp_path):
     assert catalog.list_tables(str(tmp_path / "missing")) == []
 
 
+def _one_table_warehouse(spark, tmp_path):
+    from firebolt_cdc_lambda_spark.operators.merge import KeyedTable
+    wh = tmp_path / "wh"
+    KeyedTable(spark, str(wh / "t"), ["id"], num_buckets=2).init(
+        spark.range(5).selectExpr("id", "'x' AS v"))
+    return wh
+
+
+def test_catalog_lists_a_uri_root(spark, tmp_path):
+    """A warehouse root given as a URI lists and registers its tables."""
+    from firebolt_cdc_lambda_spark import sqlapi
+    root = f"file://{_one_table_warehouse(spark, tmp_path)}"
+    assert catalog.list_tables(root) == ["t"]
+    assert dict(catalog.table_columns(root, "t")) == {"id": "bigint",
+                                                      "v": "string"}
+    assert sqlapi.register_warehouse(spark, root, prefix="uri_") == ["uri_t"]
+    assert spark.table("uri_t").count() == 5
+
+
+def test_catalog_recovers_a_lone_old_swap_dir(spark, tmp_path):
+    """A table caught between a swap's two renames (only ``t__old`` on
+    disk) is the committed table: listing recovers it."""
+    wh = _one_table_warehouse(spark, tmp_path)
+    (wh / "t").rename(wh / "t__old")
+    assert catalog.list_tables(f"file://{wh}") == ["t"]
+    assert (wh / "t" / "_schema.json").is_file()
+    assert not (wh / "t__old").exists()
+
+
 def test_salted_join_matches_plain(spark):
     from firebolt_cdc_lambda_spark.operators.skew import salted_join
     fact = spark.createDataFrame(
