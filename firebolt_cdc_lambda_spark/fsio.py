@@ -181,6 +181,12 @@ def list_names(spark: SparkSession, p: str) -> list[str]:
     return [st.getPath().getName() for st in fs.listStatus(path)]
 
 
+def glob(spark: SparkSession, pattern: str) -> list[str]:
+    """Qualified paths matching a Hadoop glob pattern ([] if none)."""
+    fs, path, _ = fs_and_path(spark, pattern)
+    return [st.getPath().toString() for st in fs.globStatus(path) or ()]
+
+
 def list_dirs(spark: SparkSession, p: str) -> list[str]:
     """Leaf names of a directory's sub-DIRECTORIES ([] if missing)."""
     fs, path, _ = fs_and_path(spark, p)

@@ -57,7 +57,6 @@ class CdcPipeline:
     def __init__(self, spark: SparkSession, table_root: str,
                  table_keys: TableKeys | None = None,
                  ledger: FileLedger | None | bool = None,
-                 ledger_partition_by_day: bool = True,
                  num_buckets: int = 64,
                  insert_deletes: bool = False,
                  version_col: str | None = None,
@@ -75,15 +74,10 @@ class CdcPipeline:
         # the warehouse root rather than silently running without one.
         # Pass ledger=False to opt out explicitly.
         if ledger is None:
-            # DAY-PARTITIONED by default (round-12 judge order #6): at
-            # the reference's ~10k files/day, GC as a pure directory
-            # drop and day-scoped forget are the right posture — flat
-            # was only ever right at toy scale, and an existing flat
-            # ledger self-migrates on its first write.  Pass an
-            # explicit FileLedger(...) to choose the flat layout.
-            ledger = FileLedger(
-                spark, f"{self.table_root}/_ledger",
-                partition_by_day=ledger_partition_by_day)
+            # one small-file layout, written by the driver with no
+            # Spark job: a check and a record cost FS calls only, and
+            # GC drops whole expired day dirs (sources/ledger.py)
+            ledger = FileLedger(spark, f"{self.table_root}/_ledger")
         self.ledger = ledger or None
         self.num_buckets = num_buckets
         self.insert_deletes = insert_deletes
@@ -539,7 +533,7 @@ class CdcPipeline:
         """The ledger half of the restore runbook (FileLedger.forget):
         un-mark the given file keys and/or every key under ``prefix``
         so ``process_file`` re-lands them instead of answering
-        ``already_processed``.  Returns the rows dropped (0: no ledger
+        ``already_processed``.  Returns the entries dropped (0: no ledger
         configured — streaming checkpoints, not the ledger, own
         exactly-once there, and a checkpointed stream re-delivers
         nothing; replay through batch ``process_file`` instead)."""

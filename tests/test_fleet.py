@@ -112,23 +112,20 @@ def test_fleet_pooled_drain_bounded_width(spark, tmp_path):
 
 
 def test_fleet_default_ledger_is_day_partitioned(spark, tmp_path):
-    """Round-12 judge order #6: the pipeline's AUTO-constructed ledger
-    (the fleet path — CdcFleet drives the pipeline, which owns the
-    ledger) defaults to the day-partitioned layout, so at the
-    reference's ~10k files/day GC is a pure directory drop and forget
-    is day-scoped.  Opting back to flat stays explicit (pass a
-    FileLedger)."""
+    """The pipeline's AUTO-constructed ledger (the fleet path —
+    CdcFleet drives the pipeline, which owns the ledger) records into
+    day dirs, so at the reference's ~10k files/day GC is a pure
+    directory drop and forget is day-scoped."""
     import os
 
-    from firebolt_cdc_lambda_spark.sources.ledger import (PDAY_COL,
-                                                          FileLedger)
+    from firebolt_cdc_lambda_spark.sources.ledger import PDAY_COL
     root = str(tmp_path / "src")
     write_file(spark, root, "users", "2024-01-01", "a.parquet", [
         Row(id=1, name="alice", Op="I", load_timestamp=TS)])
     pipe = CdcPipeline(spark, str(tmp_path / "wh"),
                        TableKeys.from_json('{"users": "id"}'),
                        num_buckets=4)
-    assert pipe.ledger is not None and pipe.ledger.partition_by_day
+    assert pipe.ledger is not None
     # batch-mode processing records into day dirs
     y, m, d = "2024", "01", "01"
     pipe.process_file(f"{root}/fair/users/{y}/{m}/{d}/a.parquet")
@@ -139,17 +136,6 @@ def test_fleet_default_ledger_is_day_partitioned(spark, tmp_path):
     pipe.ledger.maybe_cleanup(force=True)
     assert not any(n.startswith(f"{PDAY_COL}=")
                    for n in os.listdir(lroot))
-    # explicit opt-outs still respected
-    pipe_flat = CdcPipeline(spark, str(tmp_path / "whf"),
-                            TableKeys.from_json('{"users": "id"}'),
-                            ledger_partition_by_day=False, num_buckets=4)
-    assert pipe_flat.ledger.partition_by_day is False
-    pipe_custom = CdcPipeline(
-        spark, str(tmp_path / "whc"),
-        TableKeys.from_json('{"users": "id"}'),
-        ledger=FileLedger(spark, str(tmp_path / "ownledger")),
-        num_buckets=4)
-    assert pipe_custom.ledger.partition_by_day is False
 
 
 def test_fleet_maintenance_pooled_equals_serial(spark, tmp_path):

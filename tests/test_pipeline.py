@@ -361,17 +361,15 @@ def test_scd2_incident_loop_reconstructs_history(spark, tmp_path):
 
 
 def test_day_partitioned_ledger(spark, tmp_path):
-    """partition_by_day layout (round 12): GC drops whole expired-day
-    DIRS (no rewrite), forget rewrites ONLY the touched day dirs, and
-    a flat ledger migrates itself on the first partitioned write."""
+    """The day layout: GC drops whole expired-day DIRS (no rewrite),
+    and forget touches ONLY the day dirs holding the dropped keys."""
     import os
 
     # retention window chosen to split the fixture dates: TS/TS2
     # (2024-01) stay inside it, `old` (2023-01) expires
     keep_days = (dt.datetime.now() - TS).days + 30
     led = FileLedger(spark, str(tmp_path / "led"),
-                     cleanup_probability=0.0, partition_by_day=True,
-                     days_to_keep=keep_days)
+                     cleanup_probability=0.0, days_to_keep=keep_days)
     old = dt.datetime(2023, 1, 5, 8, 0)
     led.record("fair/u/2023/01/05/a.parquet", "completed",
                processed_at=old)
@@ -391,7 +389,7 @@ def test_day_partitioned_ledger(spark, tmp_path):
     assert set(os.listdir(f"{root}/_pday=20240102")) == before
     assert not led.is_processed("fair/u/2024/01/01/b.parquet")
     assert led.is_processed("fair/u/2024/01/02/c.parquet")
-    # partial-day forget: the day dir is REWRITTEN, survivors stay
+    # partial-day forget: the day dir and its other keys stay
     led.record("fair/u/2024/01/02/d.parquet", "completed",
                processed_at=TS2)
     assert led.forget(file_keys="fair/u/2024/01/02/c.parquet") == 1
@@ -406,67 +404,103 @@ def test_day_partitioned_ledger(spark, tmp_path):
     assert led.is_processed("fair/u/2024/01/02/d.parquet")
 
 
-def test_flat_ledger_migrates_to_partitioned(spark, tmp_path):
-    """A flat ledger handed partition_by_day=True migrates on the
-    first write: old rows land under their processed_at day dirs and
-    every query answer is preserved."""
+def _key_dir(root, day, key):
+    """``root/_pday=day/<sha256 hex of key>``: where a key's entries
+    and its completion marker live."""
+    import hashlib
+    return f"{root}/_pday={day}/{hashlib.sha256(key.encode()).hexdigest()}"
+
+
+def test_ledger_marker_follows_the_entry(spark, tmp_path):
+    """record() writes the entry, then (completed only) the marker:
+    an entry with no marker — a crash between the two writes — is not
+    processed, and the replay's re-record makes it processed.  A
+    failed record followed by a completed one is processed."""
     import os
 
-    path = str(tmp_path / "led")
-    flat = FileLedger(spark, path, cleanup_probability=0.0)
-    flat.record("k1", "completed", processed_at=TS)
-    flat.record("k2", "failed", processed_at=TS2)
-    part = FileLedger(spark, path, cleanup_probability=0.0,
-                      partition_by_day=True)
-    assert part.is_processed("k1")          # pre-migration read works
-    part.record("k3", "completed", processed_at=TS2)
-    names = os.listdir(path)
-    assert not [n for n in names
-                if n.endswith(".parquet") and not n.startswith("_")]
-    assert "_pday=20240101" in names and "_pday=20240102" in names
-    assert part.is_processed("k1") and part.is_processed("k3")
-    assert not part.is_processed("k2")      # failed is not completed
-    assert part._read().count() == 3
+    root = str(tmp_path / "led")
+    led = FileLedger(spark, root, cleanup_probability=0.0)
+    led.record("k1", "completed", processed_at=TS)
+    led.record("k2", "failed", "boom", processed_at=TS2)
+    led.record("k3", "completed", processed_at=TS2)
+    assert sorted(os.listdir(root)) == ["_pday=20240101", "_pday=20240102"]
+    assert led.is_processed("k1") and led.is_processed("k3")
+    assert not led.is_processed("k2")       # failed is not completed
+    assert "_completed" not in os.listdir(_key_dir(root, "20240102", "k2"))
+    led.record("k2", "completed", processed_at=TS2)
+    assert led.is_processed("k2")
+    # crash between entry and marker
+    os.remove(f"{_key_dir(root, '20240101', 'k1')}/_completed")
+    assert not led.is_processed("k1")
+    led.record("k1", "completed", processed_at=TS)
+    assert led.is_processed("k1")
+    assert led.forget(file_keys=["k1", "k2"]) == 4
+    assert sorted(os.listdir(root)) == ["_pday=20240102"]
 
 
-def test_ledger_swap_crash_states_keep_processed_files(spark, tmp_path):
-    """forget() swaps the ledger (flat) or a day dir (partitioned)
-    through fsio.replace_dir.  A crash between the two renames leaves
-    the committed rows only in the ``__old`` backup: they must still
-    answer is_processed (not read as an absent ledger and replay every
-    file).  A day swap's siblings live INSIDE the ledger root, so
-    readers must not take ``_pday=D__old`` for a day: a stale backup
-    would resurrect forgotten rows."""
+def test_ledger_drop_siblings_are_never_read(spark, tmp_path):
+    """A crash inside drop_dir leaves a ``__dropping`` sibling: one
+    of a key dir is not processed and the next forget of the key
+    clears it; one of a day dir is not processed and the next GC
+    clears it, expired or not."""
     import os
-    import shutil
 
-    path = str(tmp_path / "flat")
-    flat = FileLedger(spark, path, cleanup_probability=0.0)
-    for k in ("k1", "k2", "k3"):
-        flat.record(k, "completed", processed_at=TS)
-    assert flat.forget(file_keys="k2") == 1
-    shutil.move(path, path + "__old")
-    fresh = FileLedger(spark, path, cleanup_probability=0.0)
-    assert fresh.is_processed("k1") and fresh.is_processed("k3")
-    assert not fresh.is_processed("k2")
-    assert not os.path.exists(path + "__old")
-
-    path = str(tmp_path / "days")
-    led = FileLedger(spark, path, cleanup_probability=0.0,
-                     partition_by_day=True,
+    root = str(tmp_path / "led")
+    led = FileLedger(spark, root, cleanup_probability=0.0,
                      days_to_keep=(dt.datetime.now() - TS).days + 30)
-    for k in ("k1", "k2", "k3"):
-        led.record(k, "completed", processed_at=TS)
-    day = f"{path}/_pday=20240101"
-    pre = str(tmp_path / "pre")
-    shutil.copytree(day, pre)                 # the day before the forget
-    assert led.forget(file_keys="k2") == 1
-    shutil.copytree(pre, day + "__old")       # crash state B: the swap
-    assert not led.is_processed("k2")         # committed, and a backup
-    assert led.is_processed("k1")             # is no day of its own
-    shutil.move(day, day + "__tmp")           # crash state A: the swap
-    shutil.rmtree(day + "__old")              # did not commit
-    shutil.move(pre, day + "__old")
-    led.maybe_cleanup(force=True)             # the GC sweep recovers
-    assert all(led.is_processed(k) for k in ("k1", "k2", "k3"))
-    assert not os.path.exists(day + "__old")
+    old = dt.datetime(2023, 1, 5, 8, 0)
+    for k, at in (("k1", TS), ("k2", TS), ("k3", TS2), ("k4", old)):
+        led.record(k, "completed", processed_at=at)
+    k1 = _key_dir(root, "20240101", "k1")
+    os.rename(k1, k1 + "__dropping")
+    assert not led.is_processed("k1") and led.is_processed("k2")
+    assert led.forget(file_keys="k1") == 0  # its entry was being dropped
+    assert not os.path.exists(k1 + "__dropping")
+    assert led.is_processed("k2")
+    for day in ("20240102", "20230105"):
+        os.rename(f"{root}/_pday={day}", f"{root}/_pday={day}__dropping")
+    assert not led.is_processed("k3") and not led.is_processed("k4")
+    assert led.forget(file_keys=["k3", "k4"]) == 0
+    led.maybe_cleanup(force=True)
+    assert sorted(os.listdir(root)) == ["_pday=20240101"]
+    assert led.is_processed("k2")
+
+
+def test_ledger_key_completed_again_outlives_its_first_day(spark,
+                                                           tmp_path):
+    """Markers live in their day, so GC of the first day a key was
+    completed on leaves the later day's marker answering."""
+    import os
+
+    root = str(tmp_path / "led")
+    led = FileLedger(spark, root, cleanup_probability=0.0,
+                     days_to_keep=(dt.datetime.now() - TS).days + 30)
+    led.record("k", "completed", processed_at=dt.datetime(2023, 1, 5))
+    led.record("k", "completed", processed_at=TS)
+    led.maybe_cleanup(force=True)
+    assert os.listdir(root) == ["_pday=20240101"]
+    assert led.is_processed("k")
+
+
+def test_ledger_on_a_uri_root(spark, tmp_path):
+    """A ``file://`` root works end to end: the ledger reads and
+    writes through the Hadoop FS, never driver-local paths."""
+    import os
+
+    local = str(tmp_path / "led")
+    led = FileLedger(spark, f"file://{local}", cleanup_probability=0.0,
+                     days_to_keep=(dt.datetime.now() - TS).days + 30)
+    led.record("fair/u/2023/01/05/a.parquet", "completed",
+               processed_at=dt.datetime(2023, 1, 5))
+    led.record("fair/u/2024/01/01/b.parquet", "completed", processed_at=TS)
+    led.record("fair/u/2024/01/01/c.parquet", "completed", processed_at=TS)
+    assert led.is_processed("fair/u/2024/01/01/b.parquet")
+    assert not led.is_processed("fair/u/2024/01/01/x.parquet")
+    assert led.forget(file_keys="fair/u/2024/01/01/b.parquet") == 1
+    assert not led.is_processed("fair/u/2024/01/01/b.parquet")
+    assert led.forget(prefix="fair/u/2024/") == 1
+    assert not led.is_processed("fair/u/2024/01/01/c.parquet")
+    assert sorted(os.listdir(local)) == ["_pday=20230105"]
+    led.maybe_cleanup(force=True)
+    assert os.listdir(local) == []
+    assert not led.is_processed("fair/u/2023/01/05/a.parquet")

@@ -410,7 +410,10 @@ def test_commit_merge_shuffle_sized_to_touched_buckets(
 
 
 def _job_ids(spark) -> set:
-    jobs = spark._jsparkSession.sparkContext().statusStore().jobsList(None)
+    sc = spark._jsparkSession.sparkContext()
+    # the status store fills from the async listener bus
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
     return {jobs.apply(i).jobId() for i in range(jobs.size())}
 
 
@@ -431,3 +434,24 @@ def test_literal_lookup_is_one_job(spark, tmp_path, keys, probe, hits):
     got = kt.lookup(probe).collect()
     assert len(_job_ids(spark) - before) == 1
     assert len(got) == hits
+
+
+def test_ledger_runs_no_spark_job(spark, tmp_path):
+    """The file ledger is driver-side FS calls only: the per-file check
+    and record, forget by key and GC launch no Spark job."""
+    import datetime as dt
+
+    from firebolt_cdc_lambda_spark.sources.ledger import FileLedger
+    led = FileLedger(spark, str(tmp_path / "led"), cleanup_probability=0.0,
+                     days_to_keep=1)
+    before = _job_ids(spark)
+    led.record("fair/t/2024/01/01/a.parquet", "completed")
+    led.record("fair/t/2024/01/01/b.parquet", "failed", "boom")
+    led.record("fair/t/2024/01/01/c.parquet", "completed",
+               processed_at=dt.datetime(2024, 1, 1))
+    assert led.is_processed("fair/t/2024/01/01/a.parquet")
+    assert not led.is_processed("fair/t/2024/01/01/b.parquet")
+    assert led.forget(file_keys=["fair/t/2024/01/01/a.parquet"]) == 1
+    led.maybe_cleanup(force=True)
+    assert not led.is_processed("fair/t/2024/01/01/c.parquet")
+    assert _job_ids(spark) == before
