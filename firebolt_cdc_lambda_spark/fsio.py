@@ -18,8 +18,9 @@ schema explicitly instead of paying a footer-inference job.
 The module also holds the one dynamic partition overwrite that every
 bucket or index rewrite commits through (``overwrite_partitions``),
 the one crash-safe whole-directory swap and drop (``replace_dir``,
-``drop_dir``, ``recover_dir``) and the read-error whitelist that tells
-an absent dataset from a fault (``is_absent``).
+``drop_dir``, ``recover_dir``), the one crash-safe file replace
+(``replace_text``) and the read-error whitelist that tells an absent
+dataset from a fault (``is_absent``).
 """
 
 from __future__ import annotations
@@ -158,6 +159,24 @@ def write_text(spark: SparkSession, p: str, text: str) -> None:
         out.write(bytearray(text.encode("utf-8")))
     finally:
         out.close()
+
+
+def replace_text(spark: SparkSession, p: str, text: str) -> None:
+    """Replace file ``p`` with ``text`` in one rename: the text goes to
+    the hidden sibling ``.<name>.tmp`` first, which is then renamed
+    over ``p`` (Hadoop ``FileContext`` rename with OVERWRITE, which
+    moves a local file's checksum with it).  A crash leaves ``p`` old
+    or new, never torn; a leftover temp is never read and the next
+    replace overwrites it."""
+    fs, path, jvm = fs_and_path(spark, p)
+    hfs = jvm.org.apache.hadoop.fs
+    tmp = hfs.Path(path.getParent(), f".{path.getName()}.tmp")
+    write_text(spark, tmp.toString(), text)
+    opts = spark.sparkContext._gateway.new_array(hfs.Options.Rename, 1)
+    opts[0] = hfs.Options.Rename.OVERWRITE
+    hfs.FileContext.getFileContext(
+        path.toUri(), spark._jsc.hadoopConfiguration()).rename(
+        tmp, path, opts)
 
 
 def read_text(spark: SparkSession, p: str) -> str | None:

@@ -14,9 +14,10 @@ Reference behavior re-implemented (SURVEY §1.4, §4.1):
 * if a PRIMARY-KEY column is dropped by that gate, hard-fail
   (lambda/handler.py:902-916).
 
-In Spark the ALTER TABLE is realized structurally: the target snapshot is
-rewritten with the added columns as NULL, or equivalently the new columns
-flow in through ``merge`` with mergeSchema semantics.  The gate logic is
+In Spark the ALTER TABLE is ``KeyedTable.add_columns``: on an unversioned
+table a metadata-only change (the schema sidecar gains the columns; every
+pinned read serves them as NULL until a merge writes them), on a versioned
+one a full-epoch rewrite through ``evolve_target``.  The gate logic is
 driver-side planning code — the idiomatic Spark home for it.
 """
 

@@ -100,6 +100,22 @@ def _key_cond(keys: Sequence[str], left: str, right: str) -> Column:
     return F.expr(_key_cond_sql(keys, left, right))
 
 
+def _as_nullable(f):
+    """``f`` as a parquet read under a pinned schema serves it: the
+    field and everything nested in it nullable (Spark's asNullable)."""
+    from pyspark.sql import types as T
+
+    def dt(t):
+        if isinstance(t, T.StructType):
+            return T.StructType([_as_nullable(g) for g in t.fields])
+        if isinstance(t, T.ArrayType):
+            return T.ArrayType(dt(t.elementType), True)
+        if isinstance(t, T.MapType):
+            return T.MapType(dt(t.keyType), dt(t.valueType), True)
+        return t
+    return T.StructField(f.name, dt(f.dataType), True, f.metadata)
+
+
 def _murmur3_int32(x: int, seed: int = 42) -> int:
     """Spark's ``F.hash``/HashPartitioning hash of one INT value —
     Murmur3_x86_32.hashInt with Spark's seed 42 (a public, stable
@@ -537,11 +553,11 @@ class KeyedTable:
         return text
 
     def _write_sidecar(self, name: str, text: str) -> None:
+        # one rename commits it: every read and the catalog depend on
+        # these files, and an in-place rewrite could leave one torn
         full = f"{self.path}/{name}"
-        fs, path, jvm = self._fs_and_path(full)
-        out = fs.create(path, True)
-        out.write(bytearray(text.encode("utf-8")))
-        out.close()
+        fsio.replace_text(self.spark, full, text)
+        fs, path, _ = self._fs_and_path(full)
         self._sidecar_cache[full] = (
             fs.getFileStatus(path).getModificationTime(), text)
 
@@ -667,9 +683,10 @@ class KeyedTable:
         CURRENT meta sidecar (mtime-cached — one getFileStatus when no
         index exists) so an index built by another process after this
         merger was constructed is still maintained.  Wholesale rewrites
-        (init/rewrite/rebucket/cluster_by/zorder_by/evolution) instead
-        bump ``table_version``, which voids every sidecar at probe
-        time.
+        (init/rewrite/rebucket/cluster_by/zorder_by, and a versioned
+        table's ADD COLUMN) instead bump ``table_version``, which voids
+        every sidecar at probe time; an unversioned ADD COLUMN changes
+        no stored content and touches neither.
 
         ``kinds`` restricts the flag to one index family: compaction
         passes ("stats",) because its grouping-only rewrite provably
@@ -973,7 +990,6 @@ class KeyedTable:
     def _read_versioned(self, buckets: Sequence[int] | None,
                         as_of: int | None,
                         schema_override=None) -> DataFrame:
-        from pyspark.sql import types as T
         # schema_override (round 12): the HISTORICAL schema from the
         # version's manifest record — the parquet scan then projects to
         # exactly that era's columns (post-evolution columns pruned at
@@ -1026,8 +1042,7 @@ class KeyedTable:
                     "in-flight) compact — read the source once (its "
                     "reader rolls the swap forward) before reading "
                     "this clone, or materialize the clone")
-        rschema = T.StructType(
-            list(schema.fields) + [T.StructField(self.EPOCH_COL, T.IntegerType())])
+        rschema = self._leaf_schema(schema)
         by_root: dict[str | None, list[str]] = {}
         for (r, e), bs in sorted(groups.items(),
                                  key=lambda kv: (kv[0][0] or "", kv[0][1])):
@@ -1071,6 +1086,19 @@ class KeyedTable:
         for leg in legs[1:]:
             out = out.unionByName(leg)
         return out
+
+    def _leaf_schema(self, schema=None):
+        """The pinned schema of a read of this table's leaf files under
+        its basePath: ``schema`` (default: the sidecar) plus, on a
+        versioned table, the epoch partition column.  None when the
+        table has no sidecar."""
+        from pyspark.sql import types as T
+        if schema is None:
+            schema = self._load_schema()
+        if schema is None or not self.versioned:
+            return schema
+        return T.StructType(list(schema.fields)
+                            + [T.StructField(self.EPOCH_COL, T.IntegerType())])
 
     def exists(self) -> bool:
         return fsio.exists(self.spark, self.path)
@@ -1358,11 +1386,12 @@ class KeyedTable:
         try:
             # pin the unversioned log's schema from the table sidecar
             # (round 13; widened to the whole-log read in round 14):
-            # every entry was cast to the stored schema at append and a
-            # schema evolution drops the log on rewrite, so the sidecar
-            # + the two log columns IS the file schema — no
-            # footer-inference job on the per-merge gate probe, on a
-            # full table read with unfolded debt, or on the fold.
+            # every entry was cast to the stored schema at append, and
+            # an entry appended before an ADD COLUMN reads the new
+            # columns as NULL, so the sidecar + the two log columns IS
+            # the file schema — no footer-inference job on the
+            # per-merge gate probe, on a full table read with unfolded
+            # debt, or on the fold.
             pin = None
             schema = self._load_schema()
             if schema is not None and self.BUCKET_COL in schema.names:
@@ -2391,10 +2420,46 @@ class KeyedTable:
                 .unionByName(leg("__o", "update_preimage", differs))
                 .unionByName(leg("__n", "update_postimage", differs)))
 
+    def add_columns(self, fields: Sequence[tuple[str, object]]) -> None:
+        """ALTER TABLE ADD COLUMN: append ``fields`` (``(name, Spark
+        type)`` pairs) to the schema as nullable columns, NULL on every
+        stored row.
+
+        Unversioned tables change metadata only: the commit is one
+        atomic replace of ``_schema.json``.  No data file, delta-log
+        entry, delete vector or tombstone marker is read or written,
+        and ``table_version`` stays, so bloom and zone-map sidecars
+        stay valid (no indexed content changed).  Every read pins the
+        sidecar schema, so a file written before the ADD reads the new
+        columns as NULL; a merge writes them into the buckets it
+        touches.  The new schema is the one the rewrite route
+        (``rewrite(evolve_target(snapshot_for_rewrite(), ...))``) would
+        store: the old data fields, nullable as a pinned read serves
+        them, then the added fields, then ``_bucket``.
+
+        Versioned tables rewrite a full epoch: that entry is the
+        schema-version record and the delta-window boundary that
+        ``as_of``, ``restore`` and the log's windows rely on."""
+        if self.versioned:
+            from .evolution import SchemaReport, evolve_target
+            self.rewrite(evolve_target(self.snapshot_for_rewrite(),
+                                       SchemaReport(added=list(fields))))
+            return
+        from pyspark.sql import types as T
+        schema = self._load_schema()
+        if schema is None:
+            raise ValueError(f"no table at {self.path} to add columns to")
+        self._write_sidecar("_schema.json", T.StructType(
+            [_as_nullable(f) for f in schema.fields
+             if f.name != self.BUCKET_COL]
+            + [T.StructField(n, t, True) for n, t in fields]
+            + [schema[self.BUCKET_COL]]).json())
+
     def snapshot_for_rewrite(self) -> DataFrame:
         """ALL stored rows — including tombstone marker rows and the
         marker column — minus the bucket column: the correct base for
-        every full rewrite (rebucket / cluster_by / schema evolution).
+        every full rewrite (rebucket / cluster_by / a versioned
+        table's ADD COLUMN).
         ``read()`` hides tombstones, so rewriting from ``read()`` would
         physically drop the delete markers AND the marker column,
         silently disarming the out-of-order gate (and erroring the next
@@ -2421,7 +2486,7 @@ class KeyedTable:
                 sort_within: Sequence[str | Column] = (),
                 max_records_per_file: int | None = None) -> None:
         """Full rewrite that is safe when ``df`` reads from this table's own
-        path (e.g. schema evolution): the new table, sidecars included,
+        path (e.g. ``rebucket``): the new table, sidecars included,
         commits through ``fsio.replace_dir``.  Spark cannot overwrite a
         path it is concurrently reading from.
         Tombstone-mode callers: derive ``df`` from snapshot_for_rewrite(),
@@ -2943,8 +3008,14 @@ class KeyedTable:
         map_df = self.spark.createDataFrame(
             mapping, "__rel string, __gid int")
         depth = 3 if self.versioned else 2    # _bucket[/_epoch]/file
-        src = (self.spark.read.option("basePath", self.path)
-               .parquet(*all_paths)
+        # pinned, never inferred: after a metadata-only ADD COLUMN the
+        # groups mix files with and without the new columns, and a
+        # footer-inferred schema could drop the new columns' values
+        reader = self.spark.read.option("basePath", self.path)
+        schema = self._leaf_schema()
+        if schema is not None:
+            reader = reader.schema(schema)
+        src = (reader.parquet(*all_paths)
                .withColumn("__fp", F.col("_metadata.file_path"))
                .withColumn("__ridx", F.col("_metadata.row_index"))
                .withColumn("__rel", F.concat_ws(

@@ -422,13 +422,8 @@ class StatsIndex(SidecarIndex):
             # same pin _read_raw gives the bucket-glob path (round 13);
             # versioned layouts add the epoch partition dir column
             reader = self.spark.read.option("basePath", t.path)
-            tschema = t._load_schema()
+            tschema = t._leaf_schema()
             if tschema is not None and t.BUCKET_COL in tschema.names:
-                if t.versioned:
-                    from pyspark.sql import types as T
-                    tschema = T.StructType(
-                        list(tschema.fields)
-                        + [T.StructField(t.EPOCH_COL, T.IntegerType())])
                 reader = reader.schema(tschema)
             raw = reader.parquet(*files)
             # the versioned layout adds the epoch partition column —

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .config import TableKeys
 from .operators.dedup import deduplicate
-from .operators.evolution import SchemaReport, diff_schemas, evolve_target, merge_columns
+from .operators.evolution import SchemaReport, diff_schemas, merge_columns
 from .operators.merge import KeyedTable
 from .operators.ordering import CDC_META_COLS, CREATED_COL, UPDATED_COL
 from .sources.ingest import is_full_load_file, parse_cdc_path, read_cdc_files
@@ -388,22 +388,19 @@ class CdcPipeline:
             c for c in (UPDATED_COL, CREATED_COL)
             if c in stg.columns and c not in keep and c != self.version_col)
 
-        # apply safe ADDs structurally (ALTER TABLE ADD COLUMN analogue):
-        # temp-dir swap rewrite, because `evolved` reads the target's own
-        # path.  Evolve the RAW snapshot, not `current`: read() hides
-        # tombstone markers, and a rewrite from it would physically drop
-        # the delete markers the out-of-order gate depends on.
+        # apply safe ADDs (ALTER TABLE ADD COLUMN analogue): a schema
+        # sidecar replace on an unversioned target, a full epoch on a
+        # versioned one; the merge below writes the new columns
         if report.added:
-            evolved = evolve_target(target.snapshot_for_rewrite(), report)
-            target.rewrite(evolved)
+            target.add_columns(report.added)
 
         # pre-images for continuous aggregates: MUST materialize before the
         # merge rewrites the snapshot (see RollupTable.refresh contract)
         pre_images = changed_keys = None
         if self._rollups.get(table):
             changed_keys = stg.select(*keys).distinct().localCheckpoint(eager=True)
-            # re-read the target (NOT the lazy `current`): a schema-evolution
-            # rewrite above would have replaced the files `current` points at
+            # re-read the target (NOT the lazy `current`): it predates the
+            # ADD above, so it lacks the columns the batch added
             pre_images = (target.read().join(changed_keys, list(keys), "left_semi")
                           .localCheckpoint(eager=True))
 

@@ -82,7 +82,15 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # Every bucket-pruned read (a brace glob) makes FileStreamSink probe
+    # the glob as a literal path for a streaming-sink log and WARN a
+    # stack trace when it is not there; that miss is the normal case
+    log4j = spark._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+        log4j.Level.ERROR)
+    return spark
 
 
 #: The merge-sized pause of adaptive execution: merges, index probes and

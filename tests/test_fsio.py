@@ -146,3 +146,37 @@ def test_failed_rename_raises(spark, tmp_path, monkeypatch):
         fsio.replace_dir(spark, p, lambda t: _put(spark, t, "v2"))
     monkeypatch.undo()
     assert _get(spark, p) == "v1"
+
+
+def test_replace_text_swaps_the_file_whole(spark, tmp_path):
+    """The replace leaves the new text, its checksum (a stale one would
+    fail the checksummed read) and no temp file behind."""
+    p = str(tmp_path / "_s.json")
+    fsio.replace_text(spark, p, "one")
+    fsio.replace_text(spark, p, "two, longer")
+    assert fsio.read_text(spark, p) == "two, longer"
+    assert sorted(os.listdir(tmp_path)) == ["._s.json.crc", "_s.json"]
+
+
+def test_crashed_sidecar_replace_keeps_the_old_schema(spark, tmp_path):
+    """A crash inside a sidecar replace leaves at most the temp file,
+    torn: the table still reads its old schema, the catalog still
+    lists it, and the next sidecar write (an ADD COLUMN) succeeds."""
+    from pyspark.sql import types as T
+
+    from firebolt_cdc_lambda_spark.operators.merge import KeyedTable
+    from firebolt_cdc_lambda_spark.sources import catalog
+    wh = tmp_path / "wh"
+    kt = KeyedTable(spark, str(wh / "t"), ["id"], num_buckets=4)
+    kt.init(spark.range(10).selectExpr("id", "'x' AS v"))
+    text = kt._read_sidecar("_schema.json")
+    tmp = wh / "t" / "._schema.json.tmp"
+    tmp.write_text(text[:len(text) // 2])
+    fresh = KeyedTable(spark, str(wh / "t"), [])
+    assert fresh.read().columns == ["id", "v"]
+    assert fresh.read().count() == 10
+    assert catalog.list_tables(str(wh), spark) == ["t"]
+    fresh.add_columns([("e", T.StringType())])
+    assert not tmp.exists()
+    assert KeyedTable(spark, str(wh / "t"), []).read().columns == [
+        "id", "v", "e"]

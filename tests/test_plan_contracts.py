@@ -455,3 +455,54 @@ def test_ledger_runs_no_spark_job(spark, tmp_path):
     led.maybe_cleanup(force=True)
     assert not led.is_processed("fair/t/2024/01/01/c.parquet")
     assert _job_ids(spark) == before
+
+
+def test_evolving_batch_adds_no_job_and_keeps_untouched_files(
+        spark, tmp_path):
+    """On an unversioned table the ADD COLUMN of a batch is a schema
+    sidecar replace: the evolving batch runs as many Spark jobs as the
+    same batch without the new column, and the data files of buckets
+    it does not touch keep their names and mtimes."""
+    from pyspark.sql import types as T
+
+    from firebolt_cdc_lambda_spark.config import TableKeys
+    from firebolt_cdc_lambda_spark.operators import keyhash
+    from firebolt_cdc_lambda_spark.pipeline import CdcPipeline
+    pipe = CdcPipeline(spark, str(tmp_path / "wh"),
+                       TableKeys.from_json('{"t": "id"}'), ledger=False,
+                       num_buckets=64)
+    keys = [5, 77, 123]
+    base = "id long, v string, Op string, load_timestamp timestamp"
+
+    def batch(n, extra=False):
+        import datetime as dt
+        ts = dt.datetime(2024, 1, 1, n)
+        if extra:
+            return spark.createDataFrame(
+                [(k, f"v{n}", "U", ts, f"e{k}") for k in keys],
+                base + ", e string")
+        return spark.createDataFrame([(k, f"v{n}", "U", ts) for k in keys],
+                                     base)
+
+    pipe.process_batch("t", ["id"], spark.createDataFrame(
+        [(k, "v0", "I", None) for k in range(200)], base))
+    pipe.process_batch("t", ["id"], batch(1))          # warm
+    plain_batch, evolving_batch = batch(2), batch(3, extra=True)
+    before = _job_ids(spark)
+    pipe.process_batch("t", ["id"], plain_batch)
+    plain = len(_job_ids(spark) - before)
+    kt = pipe.target_for("t", ["id"])
+    touched = {keyhash.bucket((k,), [T.LongType()], 64) for k in keys}
+
+    def untouched_files():
+        return sorted((str(st.getPath()), st.getModificationTime())
+                      for b, st, _ in kt._walk_data_files()
+                      if b not in touched)
+    files = untouched_files()
+    before = _job_ids(spark)
+    r = pipe.process_batch("t", ["id"], evolving_batch)
+    assert [n for n, _ in r.schema_report.added] == ["e"]
+    assert len(_job_ids(spark) - before) == plain
+    assert len(files) > 50 and untouched_files() == files
+    assert {row["id"]: row["e"] for row in kt.read().collect()
+            if row["e"] is not None} == {k: f"e{k}" for k in keys}

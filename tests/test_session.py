@@ -80,3 +80,31 @@ def test_concurrent_scopes_keep_the_override_and_restore_once(spark):
     assert errors == []
     assert len(seen) == 8 * 20 and set(seen) == {value}
     assert spark.conf.get(key) == prior
+
+
+def test_bucket_pruned_read_logs_no_sink_metadata_warning(tmp_path):
+    """A bucket-pruned read names its buckets in a brace glob, which
+    Spark's FileStreamSink probes as a literal path for a streaming-sink
+    log.  The probe's miss is the normal case; the session logs it at
+    ERROR only, so it no longer WARNs a stack trace per read.  Run in a
+    fresh process: the JVM's stderr is not the test's."""
+    import subprocess
+    import sys
+    import textwrap
+    repo = pathlib.Path(firebolt_cdc_lambda_spark.__file__).parent.parent
+    code = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(repo)!r})
+        from firebolt_cdc_lambda_spark.session import get_spark
+        from firebolt_cdc_lambda_spark.operators.merge import KeyedTable
+        spark = get_spark(master="local[1]", shuffle_partitions=1)
+        kt = KeyedTable(spark, {str(tmp_path / "t")!r}, ["id"],
+                        num_buckets=4)
+        kt.init(spark.range(8))
+        print(kt._read_raw(buckets=[0, 1]).count())
+    """)
+    run = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, timeout=300)
+    assert run.returncode == 0, run.stderr
+    assert 0 < int(run.stdout.split()[-1]) < 8
+    assert "Assume no metadata directory" not in run.stderr
