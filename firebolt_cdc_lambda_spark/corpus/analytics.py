@@ -1671,7 +1671,7 @@ def _write_stream_batches(split, src, n_batches, cols):
     for i in range(n_batches):
         d = os.path.join(src, f"b{i}.parquet")
         (split.where(F.col("b") == i).select(*cols)
-         .coalesce(1).write.mode("overwrite").parquet(d))
+         .coalesce(1).write.parquet(d))
         mt = 1_000_000 + i * 100                    # strictly increasing
         for root, _, files in os.walk(d):
             for fn in files:

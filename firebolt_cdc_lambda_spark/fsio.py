@@ -15,12 +15,13 @@ datasets this process reads repeatedly (corpus tables, index stores,
 zone maps, the delete-vector sidecar), kept so that a read passes the
 schema explicitly instead of paying a footer-inference job.
 
-The module also holds the one dynamic partition overwrite that every
-bucket or index rewrite commits through (``overwrite_partitions``),
-the one crash-safe whole-directory swap and drop (``replace_dir``,
-``drop_dir``, ``recover_dir``), the one crash-safe file replace
-(``replace_text``) and the read-error whitelist that tells an absent
-dataset from a fault (``is_absent``).
+The module is the one place that names an overwrite mode.  It holds the
+dynamic partition overwrite every bucket or index refresh commits
+through (``overwrite_partitions``), the crash-safe whole-directory swap
+every full rebuild and re-init commits through (``replace_dir``: a fresh
+dir, so no mode applies) and drop (``drop_dir``, ``recover_dir``), the
+one crash-safe file replace (``replace_text``) and the read-error
+whitelist that tells an absent dataset from a fault (``is_absent``).
 """
 
 from __future__ import annotations
@@ -63,10 +64,10 @@ def overwrite_partitions(df: DataFrame, root: str, col: str,
     """Replace the ``col=`` partitions of ``root`` that ``df`` holds and
     delete ``root/col=v`` for every ``v`` in ``emptied``.
 
-    The write is a DYNAMIC partition overwrite, set per write: under a
-    session with Spark's STATIC default the same write would wipe every
-    partition ``df`` does not hold.  A partition whose every row went
-    away is absent from ``df``, so the overwrite leaves its old files;
+    The write is a DYNAMIC partition overwrite, set per write: under
+    Spark's STATIC default, which the engine's session keeps, the same
+    write would wipe every partition ``df`` does not hold.  A partition
+    whose every row went away is absent from ``df``, so the overwrite leaves its old files;
     the caller names those in ``emptied``.  ``df`` is shuffled on
     ``col`` (one file per partition) into ``num_partitions`` tasks, or
     the session's shuffle partitions.  A ``df`` that reads ``root``
@@ -95,8 +96,9 @@ def recover_dir(spark: SparkSession, p: str) -> bool:
     it promoted the backup.  Only ``p__old`` beside no ``p`` (a crash
     between the swap's two renames) holds the committed state, so it
     is renamed back; ``p__old`` beside ``p`` (a crash before the backup
-    delete) and a ``p__dropping`` are leftovers.  Callers run it where
-    ``p`` was found absent, or before a swap: it costs FS probes."""
+    delete) and a ``p__dropping`` are leftovers.  It costs FS probes:
+    run it where ``p`` was found absent, before a swap, or in an index
+    handle's constructor, never on the hot path."""
     fs, path, jvm = fs_and_path(spark, p)
     old = jvm.org.apache.hadoop.fs.Path(f"{p}__old")
     promoted = False

@@ -105,17 +105,7 @@ class BloomIndex(SidecarIndex):
         """Full (re)build over every bucket on disk; registers the column
         in the table meta so merges start flagging dirty buckets.
         Returns the number of buckets indexed."""
-        words = self._words_for(None)
-        (words.repartition("b").write.mode("overwrite")
-         # STATIC overwrite, explicitly: under the session's dynamic
-         # default a full rebuild after a DOWNWARD rebucket would only
-         # replace the new bucket ids' partitions, leaving the old ids'
-         # stale rows in the dataset — phantom fail-open candidates for
-         # bloom, and for stats a vanished-file probe degrade to a
-         # PERMANENT full scan (latent since round 5/8; caught by the
-         # bloom refresh_many equivalence test, round 9)
-         .option("partitionOverwriteMode", "static")
-         .partitionBy("b").parquet(self.words_path))
+        self._replace_data(self._words_for(None))
         built = sorted(self.table.file_stats())
         self._save_side({"column": self.column, "m": self.m, "k": self.k,
                          "table_version": self._current_tv(),
@@ -164,11 +154,7 @@ class BloomIndex(SidecarIndex):
             .localCheckpoint(eager=True)
         built = sorted(table.file_stats())
         for c, ix in ixs.items():
-            (words.where(F.col("t") == c).drop("t")
-             .repartition("b").write.mode("overwrite")
-             # STATIC, like build(): see the single-build comment
-             .option("partitionOverwriteMode", "static")
-             .partitionBy("b").parquet(ix.words_path))
+            ix._replace_data(words.where(F.col("t") == c).drop("t"))
             ix._save_side({"column": c, "m": ix.m, "k": ix.k,
                            "table_version": ix._current_tv(),
                            "built": built, "dirty": []})

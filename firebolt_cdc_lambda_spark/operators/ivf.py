@@ -60,6 +60,7 @@ class IvfIndex:
         self.path = path.rstrip("/")
         self.n_centroids = n_centroids
         self.nprobe = nprobe
+        fsio.recover_dir(spark, self.path)    # a crashed build's backup
 
     def _read_store(self, store: str) -> DataFrame:
         # schema pin (cells/centroids layouts are fixed at build
@@ -93,12 +94,14 @@ class IvfIndex:
                      F.struct((-F.col("ccos")).alias("nc"),
                               F.col("cent_id").alias("cid"))).alias("m"))
                  .select("vec_id", "m.cell", "m.qv", "m.norm2"))
-        # STATIC overwrite: a rebuild must drop the old cells, not only
-        # replace the ones the new build writes again
-        (cells.write.mode("overwrite")
-         .option("partitionOverwriteMode", "static")
-         .partitionBy("cell").parquet(f"{self.path}/cells"))
-        (cents.write.mode("overwrite").parquet(f"{self.path}/centroids"))
+
+        def write(tmp):
+            cells.write.partitionBy("cell").parquet(f"{tmp}/cells")
+            cents.write.parquet(f"{tmp}/centroids")
+
+        # one swap: no old cell survives a rebuild, and cells and
+        # centroids commit together
+        fsio.replace_dir(self.spark, self.path, write)
         # a rebuild may change the id/vector types: drop the pins
         fsio.unpin(f"{self.path}/cells")
         fsio.unpin(f"{self.path}/centroids")

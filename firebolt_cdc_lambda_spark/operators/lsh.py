@@ -62,6 +62,9 @@ class LshIndex:
         self.path = path.rstrip("/")
         self.n_shards = n_shards
         self.threshold = threshold
+        # a crashed build's backup: read as absent, it would mean "no
+        # near-duplicates", and an append would start a new store
+        fsio.recover_dir(spark, self.path)
 
     # -- fingerprinting ---------------------------------------------------
     def _fingerprints(self, docs: DataFrame, id_col: str,
@@ -118,38 +121,33 @@ class LshIndex:
         return self._fingerprints(docs, id_col, text_col)
 
     # -- build / ingest ---------------------------------------------------
-    def _write(self, docs: DataFrame, id_col: str, text_col: str,
-               mode: str) -> None:
-        # cache the fused fingerprints: both store writes read them, and
-        # without it each write re-runs the shingle+minhash computation
-        # over the whole input
-        fused = self._fingerprints(docs, id_col, text_col).cache()
-        try:
-            self._write_fused(fused, mode)
-        finally:
-            fused.unpersist()
-        if mode == "overwrite":
-            # a rebuild may change the doc_id type: drop the pins
-            fsio.unpin(f"{self.path}/sig")
-            fsio.unpin(f"{self.path}/buckets")
-
-    def _write_fused(self, fused: DataFrame, mode: str) -> None:
-        # STATIC overwrite: a rebuild must drop every old shard, not
-        # only the shards its documents hash to (ignored on append)
+    def _write_fused(self, fused: DataFrame, root: str,
+                     mode: str | None = None) -> None:
         (self._sig_of(fused)
          .withColumn("shard", self._doc_shard("doc_id"))
          .repartition("shard")
-         .write.mode(mode).option("partitionOverwriteMode", "static")
-         .partitionBy("shard").parquet(f"{self.path}/sig"))
+         .write.mode(mode).partitionBy("shard").parquet(f"{root}/sig"))
         (self._buckets_of(fused).repartition("shard")
-         .write.mode(mode).option("partitionOverwriteMode", "static")
-         .partitionBy("shard").parquet(f"{self.path}/buckets"))
+         .write.mode(mode).partitionBy("shard").parquet(f"{root}/buckets"))
 
     def build(self, docs: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> None:
         """One-time full-corpus fingerprinting (or periodic re-build,
-        which doubles as compaction of append-accumulated files)."""
-        self._write(docs, id_col, text_col, "overwrite")
+        which doubles as compaction of append-accumulated files).  Both
+        stores commit together through one ``fsio.replace_dir``: no
+        old shard survives, and a crash leaves the old index whole."""
+        # cache the fused fingerprints: both store writes read them, and
+        # without it each write re-runs the shingle+minhash computation
+        # over the whole input (add caches for the same reason)
+        fused = self._fingerprints(docs, id_col, text_col).cache()
+        try:
+            fsio.replace_dir(self.spark, self.path,
+                             lambda tmp: self._write_fused(fused, tmp))
+        finally:
+            fused.unpersist()
+        # a rebuild may change the doc_id type: drop the pins
+        fsio.unpin(f"{self.path}/sig")
+        fsio.unpin(f"{self.path}/buckets")
 
     def add(self, docs: DataFrame, id_col: str = "doc_id",
             text_col: str = "text") -> None:
@@ -157,15 +155,18 @@ class LshIndex:
         typically ``docs`` minus ``probe`` matches).  Appends accumulate
         small files per shard; a periodic ``build`` over the full corpus
         re-compacts, exactly like KeyedTable's rebucket maintenance."""
-        self._check_doc_type(docs.schema[id_col].dataType)
-        self._write(docs, id_col, text_col, "append")
+        fused = self._fingerprints(docs, id_col, text_col).cache()
+        try:
+            self.add_fused(fused)
+        finally:
+            fused.unpersist()
 
     def add_fused(self, fused: DataFrame) -> None:
         """``add`` from precomputed ``fingerprints()`` output — the
         zero-recompute path for gates that already materialized the
         batch's fingerprints."""
         self._check_doc_type(fused.schema["doc_id"].dataType)
-        self._write_fused(fused, "append")
+        self._write_fused(fused, self.path, "append")
 
     def _check_doc_type(self, doc_type) -> None:
         """Raise before an append whose ``doc_id`` type differs from the

@@ -330,8 +330,8 @@ class KeyedTable:
         buckets = distinct _bucket of staging keys      (tiny, collected)
         current = read(partition filter: _bucket IN buckets)   <- pruned scan
         merged  = merge_cdc(current, staging, keys)
-        write mode=overwrite partitionBy(_bucket)       <- dynamic overwrite
-                                                           touches only those dirs
+        fsio.overwrite_partitions(merged, _bucket)  <- dynamic overwrite
+                                                       touches only those dirs
 
     At 100 TB with e.g. 16k buckets, a small micro-batch touching 50 keys
     rewrites ≤50 buckets (~0.3% of the table) instead of the whole table.
@@ -966,13 +966,16 @@ class KeyedTable:
     def _write_epoch(self, bucketed: DataFrame, epoch: int,
                      sort_within: Sequence[str] = (),
                      max_records_per_file: int | None = None,
-                     num_partitions: int | None = None) -> None:
+                     num_partitions: int | None = None,
+                     root: str | None = None) -> None:
         """Append ``bucketed`` (already carrying _bucket) as epoch
         ``epoch``.  Append-only: prior epochs are immutable, so readers
         of any older version are never disturbed mid-write.
         ``num_partitions`` sizes the _bucket shuffle (default: the
-        session's shuffle partitions)."""
-        self._clean_epoch_dirs(epoch)
+        session's shuffle partitions).  ``root`` writes the epoch into
+        that fresh dir instead of the table's (init's swap)."""
+        if root is None:
+            self._clean_epoch_dirs(epoch)
         shaped = bucketed.withColumn(self.EPOCH_COL, F.lit(epoch))
         shaped = (shaped.repartition(num_partitions, self.BUCKET_COL)
                   if num_partitions else
@@ -985,7 +988,7 @@ class KeyedTable:
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile",
                                    int(max_records_per_file))
-        writer.parquet(self.path)
+        writer.parquet(root or self.path)
 
     def _read_versioned(self, buckets: Sequence[int] | None,
                         as_of: int | None,
@@ -1137,39 +1140,21 @@ class KeyedTable:
         # (bucket, epoch) collisions with the dead pins
         self.known_clones = []
         bucketed = self._with_bucket(df)
-        if self.versioned:
-            # wipe any prior content: init IS the reset point of history
-            fs, root, _ = self._fs_and_path(self.path)
-            if fs.exists(root):
-                fs.delete(root, True)
-            self._sidecar_cache.clear()
-            self._write_epoch(bucketed, 0)
-            self._save_schema(bucketed)
-            self._save_meta()
-            self._save_manifest([{
-                "e": 0, "op": "init", "full": True,
-                "buckets": list(range(self.num_buckets)), "emptied": [],
-                "num_buckets": self.num_buckets,
-                # schema-per-version record (round 12): full entries
-                # stamp the schema they wrote — the only points it can
-                # change — so _schema_text_as_of resolves any version
-                "schema": bucketed.schema.json()}])
+        if not self.versioned:
+            self._swap_unversioned(bucketed)
             return
-        (bucketed
-         .repartition(self.BUCKET_COL)
-         .write.mode("overwrite")
-         # STATIC overwrite, explicitly: the session default is dynamic
-         # (the merge path wants it), under which re-initializing an
-         # existing table would replace only the buckets present in the
-         # new data — any bucket the new rows don't hash into would keep
-         # serving the PREVIOUS table's rows.  init is the reset point:
-         # the whole path must be truncated (the versioned branch above
-         # deletes the root for the same reason).
-         .option("partitionOverwriteMode", "static")
-         .partitionBy(self.BUCKET_COL)
-         .parquet(self.path))
-        self._save_schema(bucketed)
-        self._save_meta()
+        import json
+        # init IS the reset point of history: the swap drops every prior
+        # epoch.  Full entries stamp the schema they wrote (round 12).
+        self._swap_in(
+            lambda tmp: self._write_epoch(bucketed, 0, root=tmp),
+            {"_schema.json": bucketed.schema.json(),
+             "_meta.json": self._meta_text(),
+             "_epochs.json": json.dumps({"epochs": [{
+                 "e": 0, "op": "init", "full": True,
+                 "buckets": list(range(self.num_buckets)), "emptied": [],
+                 "num_buckets": self.num_buckets,
+                 "schema": bucketed.schema.json()}]})})
 
     def _bucket_glob_read(self, root: str, buckets: Sequence[int],
                           schema=None) -> DataFrame:
@@ -1290,8 +1275,7 @@ class KeyedTable:
         fsio.pin(self._dv_path, pinned.schema)
         fsio.replace_dir(
             self.spark, self._dv_path,
-            lambda tmp: pinned.coalesce(1).write.mode("overwrite")
-            .parquet(tmp))
+            lambda tmp: pinned.coalesce(1).write.parquet(tmp))
 
     # -- delta-log sidecar (merge-on-read UPSERTS, round-10 headline) ------
     def _read_delta(self, buckets: Sequence[int] | None = None,
@@ -2529,35 +2513,11 @@ class KeyedTable:
                 "schema": bucketed.schema.json()})
             self._save_manifest(entries)
             return
-        shaped = bucketed.repartition(self.BUCKET_COL)
-        if sort_within:
-            # Lead with the bucket column: the parquet writer requires rows
-            # sorted by partition cols and would otherwise insert its own
-            # (unstable) sort on _bucket, destroying the in-bucket order.
-            shaped = shaped.sortWithinPartitions(self.BUCKET_COL, *sort_within)
-        writer = shaped.write.mode("overwrite").partitionBy(self.BUCKET_COL)
-        if max_records_per_file:
-            # the writer cuts files IN SORT ORDER, so each file covers a
-            # contiguous range of sort_within — the zone-map layout
-            writer = writer.option("maxRecordsPerFile",
-                                   int(max_records_per_file))
         if self.delta_upserts:
             # the tmp write materializes the folded view, so the swap
             # commits the folded watermark with the data
             self.delta_folded_seq = self.delta_seq
-
-        def write(tmp):
-            writer.parquet(tmp)
-            # the sidecars ride the swap: a rebucket's new count lands
-            # atomically with the data it hashed
-            fsio.write_text(self.spark, f"{tmp}/_schema.json",
-                            bucketed.schema.json())
-            fsio.write_text(self.spark, f"{tmp}/_meta.json",
-                            self._meta_text())
-
-        fsio.replace_dir(self.spark, self.path, write)
-        for name in ("_schema.json", "_meta.json"):
-            self._sidecar_cache.pop(f"{self.path}/{name}", None)
+        self._swap_unversioned(bucketed, sort_within, max_records_per_file)
         if self.delta_upserts:
             # AFTER the swap (dropping before it would lose the log's
             # changes if the swap never committed).  Crash window
@@ -2565,6 +2525,42 @@ class KeyedTable:
             # rows identical to the folded base (converges), and the
             # next append re-arms the fold gate that clears it.
             self._drop_delta()
+
+    def _swap_unversioned(self, bucketed: DataFrame,
+                          sort_within: Sequence[str | Column] = (),
+                          max_records_per_file: int | None = None) -> None:
+        """Replace an unversioned table with ``bucketed`` and its
+        ``_schema.json``/``_meta.json`` (init and ``rewrite``)."""
+        shaped = bucketed.repartition(self.BUCKET_COL)
+        if sort_within:
+            # Lead with the bucket column: the parquet writer requires rows
+            # sorted by partition cols and would otherwise insert its own
+            # (unstable) sort on _bucket, destroying the in-bucket order.
+            shaped = shaped.sortWithinPartitions(self.BUCKET_COL, *sort_within)
+        writer = shaped.write.partitionBy(self.BUCKET_COL)
+        if max_records_per_file:
+            # the writer cuts files IN SORT ORDER, so each file covers a
+            # contiguous range of sort_within — the zone-map layout
+            writer = writer.option("maxRecordsPerFile",
+                                   int(max_records_per_file))
+        self._swap_in(writer.parquet,
+                      {"_schema.json": bucketed.schema.json(),
+                       "_meta.json": self._meta_text()})
+
+    def _swap_in(self, write_data, sidecars: dict[str, str]) -> None:
+        """Replace the table dir through ``fsio.replace_dir`` with what
+        ``write_data(tmp)`` writes plus the ``sidecars`` (name -> text).
+        The sidecars ride the swap: a rebucket's new count lands
+        atomically with the data it hashed, and every crash point
+        leaves the old table or the new one whole."""
+        def write(tmp):
+            write_data(tmp)
+            for name, text in sidecars.items():
+                fsio.write_text(self.spark, f"{tmp}/{name}", text)
+
+        fsio.replace_dir(self.spark, self.path, write)
+        for name in sidecars:
+            self._sidecar_cache.pop(f"{self.path}/{name}", None)
 
     def file_stats(self) -> dict[int, int]:
         """``{bucket: data-file count}`` from a pure filesystem listing —
@@ -2955,6 +2951,10 @@ class KeyedTable:
         Returns ``{"groups", "files_removed", "files_added",
         "buckets"}`` (all zero/empty when nothing qualifies)."""
         self._recover_compact()
+        # a compact that crashed before its intent left staged files no
+        # intent names; renamed in, they would serve duplicate rows
+        staging = f"{self.path}__compact_staging"
+        fsio.drop_dir(self.spark, staging)
         assign: dict[int, int] | None = None
         if self.versioned:
             assign, _ = self._resolve_epochs(None)
@@ -3034,9 +3034,7 @@ class KeyedTable:
                   # guard rewrite() carries (review finding, round 9)
                   .sortWithinPartitions(*pcols, "__rel", "__ridx")
                   .drop("__fp", "__ridx", "__rel", "__gid"))
-        staging = f"{self.path}__compact_staging"
-        (packed.write.mode("overwrite")
-         .partitionBy(*pcols).parquet(staging))
+        packed.write.partitionBy(*pcols).parquet(staging)
         # -- intent, then swap (every state below is recoverable) -------
         fs, _, jvm = self._fs_and_path(self.path)
         hpath = jvm.org.apache.hadoop.fs.Path
@@ -3660,7 +3658,10 @@ class KeyedTable:
                 entry = j.where(keep).select("__e.*")
         seq = self._bump_delta_seq()        # persisted BEFORE the append
         out = entry.select(
-            *[F.col(c).cast(schema[c].dataType).alias(c)
+            # by type name, as merge_cdc casts: a cast to the stored
+            # type itself fails for a non-null nested type, e.g.
+            # array<string> with containsNull=false
+            *[F.col(c).cast(schema[c].dataType.simpleString()).alias(c)
               for c in data_cols],
             F.col(self.DELTA_DEL_COL).cast("boolean")
             .alias(self.DELTA_DEL_COL),

@@ -72,6 +72,7 @@ class PqIndex:
         self.path = path.rstrip("/")
         self.n_subspaces = n_subspaces
         self.n_codes = n_codes
+        fsio.recover_dir(spark, self.path)    # a crashed build's backup
 
     def _read_store(self, store: str) -> DataFrame:
         # schema pin (codes/codebooks layouts are fixed at build
@@ -125,15 +126,18 @@ class PqIndex:
                      F.struct("m", "code"))).alias("mc"))
                  .selectExpr("vec_id",
                              "transform(mc, p -> CAST(p.code AS INT)) AS codes"))
-        writer = codes.write.mode("overwrite")
+        writer = codes.write
         if cells is not None:
             codes = codes.join(cells.selectExpr("vec_id", "cell"), "vec_id")
-            # STATIC, like IvfIndex.build: a rebuild drops old cells
-            writer = codes.repartition("cell").write.mode("overwrite") \
-                .option("partitionOverwriteMode", "static") \
-                .partitionBy("cell")
-        writer.parquet(f"{self.path}/codes")
-        cb.write.mode("overwrite").parquet(f"{self.path}/codebooks")
+            writer = codes.repartition("cell").write.partitionBy("cell")
+
+        def write(tmp):
+            writer.parquet(f"{tmp}/codes")
+            cb.write.parquet(f"{tmp}/codebooks")
+
+        # one swap, like IvfIndex.build: codes and codebooks commit
+        # together
+        fsio.replace_dir(self.spark, self.path, write)
         # a rebuild may change layout (cell partitioning, id type):
         # drop the pins
         fsio.unpin(f"{self.path}/codes")

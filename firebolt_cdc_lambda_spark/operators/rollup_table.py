@@ -45,6 +45,7 @@ class RollupTable:
         self.group_cols = list(group_cols)
         self.agg_builder = agg_builder
         self.num_buckets = num_buckets
+        fsio.recover_dir(spark, path)    # a crashed init's backup
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -56,20 +57,16 @@ class RollupTable:
         return base.groupBy(*self.group_cols).agg(*self.agg_builder())
 
     def init(self, base: DataFrame) -> None:
-        """(Re)aggregate from scratch — REPLACES the whole store.  The
-        overwrite is pinned STATIC defensively against a dynamic
-        session default (refresh() pins dynamic on its own write, so
-        nothing here relies on the session setting): under dynamic, a
-        re-init whose fresh aggregate occupies FEWER buckets would
-        leave the vacated bucket dirs' stale groups alive (found via a
-        shrinking full reload — group gone from the base, still served
-        by the rollup)."""
-        (self._with_bucket(self._aggregate(base))
-         .repartition(self.BUCKET_COL)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "static")
-         .partitionBy(self.BUCKET_COL)
-         .parquet(self.path))
+        """(Re)aggregate from scratch — REPLACES the whole store through
+        ``fsio.replace_dir``.  A re-init whose fresh aggregate occupies
+        FEWER buckets must not leave the vacated bucket dirs' stale
+        groups alive (found via a shrinking full reload — group gone
+        from the base, still served by the rollup)."""
+        fsio.replace_dir(
+            self.spark, self.path,
+            lambda tmp: self._with_bucket(self._aggregate(base))
+            .repartition(self.BUCKET_COL)
+            .write.partitionBy(self.BUCKET_COL).parquet(tmp))
 
     def exists(self) -> bool:
         """Hadoop-FS existence check — works on object stores, unlike

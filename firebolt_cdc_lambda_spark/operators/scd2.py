@@ -185,9 +185,9 @@ class Scd2Table:
         self.op_col = op_col
         self.delete_values = list(delete_values)
         # the caller's definition, kept verbatim: init() is a full
-        # static-overwrite rebuild, so THERE the constructor arguments
-        # win over any stored sidecar (reconfiguration point); apply()
-        # keeps honoring the stored definition loaded below.
+        # rebuild, so THERE the constructor arguments win over any
+        # stored sidecar (reconfiguration point); apply() keeps
+        # honoring the stored definition loaded below.
         self._ctor = {"order": list(order), "tracked": list(tracked),
                       "num_buckets": num_buckets, "op_col": op_col,
                       "delete_values": list(delete_values)}
@@ -220,15 +220,6 @@ class Scd2Table:
         self.delete_values = list(meta.get("delete_values",
                                            self.delete_values))
 
-    def _save_meta(self, root: str | None = None) -> None:
-        import json
-
-        root = root or self.path
-        fsio.write_text(self.spark, f"{root}/{self.META}", json.dumps({
-            "keys": self.keys, "order": self.order,
-            "tracked": self.tracked, "num_buckets": self.num_buckets,
-            "op_col": self.op_col, "delete_values": self.delete_values}))
-
     @property
     def _tracked_eff(self) -> list[str]:
         return [*self.tracked, *( [DELETED_COL] if self.op_col else [] )]
@@ -258,16 +249,27 @@ class Scd2Table:
             F.pmod(F.xxhash64(*[F.col(k) for k in self.keys]),
                    F.lit(self.num_buckets)))
 
-    def _write(self, dim: DataFrame, path: str) -> None:
-        # init must be a STATIC overwrite (wipe the whole path — a
-        # dynamic one would leave stale buckets from any prior table
-        # there); rewind writes replace_dir's fresh tmp dir; apply
-        # replaces only the buckets it wrote (fsio.overwrite_partitions).
-        (self._with_bucket(dim).repartition(self.BUCKET_COL)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "static")
-         .partitionBy(self.BUCKET_COL)
-         .parquet(path))
+    def _write(self, dim: DataFrame) -> None:
+        """Replace the whole store with ``dim`` (init and rewind)
+        through ``fsio.replace_dir``: no bucket of a prior table
+        survives, and every crash point leaves the old store or the
+        new one whole.  apply replaces only the buckets it wrote
+        (``fsio.overwrite_partitions``).  The swap carries the
+        _scd2_meta.json sidecar: without it a later handle silently
+        falls back to its constructor num_buckets/op_col/tracked, and
+        mis-bucketed dynamic applies would fork per-key histories."""
+        import json
+        meta = json.dumps({
+            "keys": self.keys, "order": self.order,
+            "tracked": self.tracked, "num_buckets": self.num_buckets,
+            "op_col": self.op_col, "delete_values": self.delete_values})
+
+        def write(tmp):
+            (self._with_bucket(dim).repartition(self.BUCKET_COL)
+             .write.partitionBy(self.BUCKET_COL).parquet(tmp))
+            fsio.write_text(self.spark, f"{tmp}/{self.META}", meta)
+
+        fsio.replace_dir(self.spark, self.path, write)
 
     def init(self, history: DataFrame) -> None:
         """Bootstrap from a full change history.  As the table's reset
@@ -277,14 +279,14 @@ class Scd2Table:
         for attr, val in self._ctor.items():
             setattr(self, attr, val)
         self._write(scd2_snapshot(self._prep(history), self.keys,
-                                  self.order, self._tracked_eff), self.path)
-        self._save_meta()
+                                  self.order, self._tracked_eff))
 
     def has_data(self) -> bool:
         """True iff at least one bucket directory was COMMITTED.  A
-        crashed first init leaves only _temporary/ (or nothing), which
-        must route the next batch back to init, not apply — otherwise
-        the stream wedges on an uninferrable empty dir."""
+        crashed first init leaves nothing at the path (only its
+        ``__tmp`` sibling), which must route the next batch back to
+        init, not apply — otherwise the stream wedges on an
+        uninferrable empty dir."""
         return any(n.startswith(f"{self.BUCKET_COL}=")
                    for n in fsio.list_names(self.spark, self.path))
 
@@ -379,17 +381,6 @@ class Scd2Table:
                            .otherwise(F.col("valid_to")))
                .withColumn("is_current", F.col("__rn") == 1)
                .drop("__rn"))
-
-        def write(tmp):
-            self._write(out, tmp)
-            # the swap replaces the whole path INCLUDING the
-            # _scd2_meta.json sidecar; without it a later handle
-            # silently falls back to its constructor num_buckets/
-            # op_col/tracked — mis-bucketed dynamic applies would then
-            # fork per-key histories, the exact hazard the sidecar
-            # guards.  Unlike init, rewind is NOT a reconfiguration
-            # point: it saves the STORED definition (self.* already
-            # reflects the loaded sidecar).
-            self._save_meta(tmp)
-
-        fsio.replace_dir(self.spark, self.path, write)
+        # unlike init, rewind is NOT a reconfiguration point: it saves
+        # the STORED definition (self.* already reflects the sidecar)
+        self._write(out)

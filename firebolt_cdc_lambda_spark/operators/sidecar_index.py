@@ -11,7 +11,7 @@
   always candidates);
 * ``refresh()`` recomputes exactly the dirty buckets (cost ∝ churn)
   and falls back to a full ``build()`` when a wholesale rewrite bumped
-  ``table_version`` (the void);
+  ``table_version`` (the void); ``build()`` swaps the whole dataset;
 * every failure direction over-scans, never misses.
 
 That contract used to live in two verbatim copies (review finding,
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import json
 
+from .. import fsio
+
 
 class SidecarIndex:
     kind: str = ""          # subclass: "bloom" | "stats"
@@ -37,16 +39,26 @@ class SidecarIndex:
         self.spark = table.spark
         self.data_path = f"{table.path}__{self.kind}_{column}"
         self.sidecar_path = f"{self.data_path}.json"
+        # a crashed build's backup: a dynamic refresh into an absent
+        # dataset would start a partial one beside it
+        fsio.recover_dir(self.spark, self.data_path)
 
     # -- tiny JSON sidecar --------------------------------------------------
     def _load_side(self) -> dict | None:
-        from .. import fsio
         text = fsio.read_text(self.spark, self.sidecar_path)
         return None if text is None else json.loads(text)
 
     def _save_side(self, side: dict) -> None:
-        from .. import fsio
         fsio.write_text(self.spark, self.sidecar_path, json.dumps(side))
+
+    def _replace_data(self, df) -> None:
+        """Replace the whole dataset with ``df`` (partitioned by ``b``):
+        no old bucket id survives a rebuild after a DOWNWARD rebucket,
+        and a crashed build leaves the old dataset whole."""
+        fsio.replace_dir(
+            self.spark, self.data_path,
+            lambda tmp: df.repartition("b").write.partitionBy("b")
+            .parquet(tmp))
 
     def _current_tv(self) -> int:
         meta = self.table._load_meta()

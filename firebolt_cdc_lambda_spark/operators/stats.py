@@ -191,16 +191,7 @@ class StatsIndex(SidecarIndex):
         column in the table meta so merges start flagging dirty
         buckets.  Returns the number of files indexed."""
         stats = self._stats_for(None).localCheckpoint(eager=True)
-        (stats.repartition("b").write.mode("overwrite")
-         # STATIC overwrite, explicitly: under the session's dynamic
-         # default a full rebuild after a DOWNWARD rebucket would only
-         # replace the new bucket ids' partitions, leaving the old ids'
-         # stale rows in the dataset — phantom fail-open candidates for
-         # bloom, and for stats a vanished-file probe degrade to a
-         # PERMANENT full scan (latent since round 5/8; caught by the
-         # bloom refresh_many equivalence test, round 9)
-         .option("partitionOverwriteMode", "static")
-         .partitionBy("b").parquet(self.stats_path))
+        self._replace_data(stats)
         fsio.pin(self.stats_path, stats.schema)
         n_files = stats.count()
         built = sorted(self.table.file_stats())
@@ -233,10 +224,7 @@ class StatsIndex(SidecarIndex):
         for i, c in enumerate(columns):
             ix = cls(t, c)
             one = cls._one_column(stats, i)
-            (one.repartition("b").write.mode("overwrite")
-             # STATIC, like build(): see the single-build comment
-             .option("partitionOverwriteMode", "static")
-             .partitionBy("b").parquet(ix.stats_path))
+            ix._replace_data(one)
             fsio.pin(ix.stats_path, one.schema)
             ix._save_side({"column": c,
                            "table_version": ix._current_tv(),

@@ -3,8 +3,8 @@
 The engine is designed for a multi-executor cluster reading ~100 TB; the
 local[{N}] session used in tests/bench only changes the master URL, not the
 plan shapes.  AQE is on so skewed CDC keys and small post-filter shuffles
-are re-planned at runtime; dynamic partition overwrite enables the
-bucket-pruned snapshot merge (see operators/merge.py).
+are re-planned at runtime.  The partition-overwrite mode stays Spark's
+default: every overwrite sets its own (see fsio.py).
 """
 
 from __future__ import annotations
@@ -62,8 +62,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
         # Arrow for the (few) pandas-UDF paths
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # bucket-pruned snapshot merge rewrites only affected partitions
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Partition-directory listing switches from driver-side to a
         # distributed Spark job above this many paths.  The stock
         # default (32) is tuned for object stores; on this engine every

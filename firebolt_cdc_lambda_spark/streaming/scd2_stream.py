@@ -76,10 +76,9 @@ class Scd2Stream:
             cols.append(self.table.op_col)
         # ingestion_seq is already stamped on the stream (see start)
         batch = batch_df.select(*cols)
-        # has_data(), not a bare dir-exists check: a CRASHED first init
-        # leaves the directory with only _temporary/ wreckage, and
-        # routing that to apply() would wedge the stream on an
-        # uninferrable empty read; init's static overwrite resets it.
+        # has_data(), not a bare dir-exists check: a directory with no
+        # committed bucket dir routed to apply() would wedge the stream
+        # on an uninferrable empty read; init's swap replaces it.
         if self.table.has_data():
             self.table.apply(batch)
         else:

@@ -5,7 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from firebolt_cdc_lambda_spark.session import get_spark  # noqa: E402
+from firebolt_cdc_lambda_spark.session import conf_scope, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.001")
@@ -67,6 +67,16 @@ def _arrow_backed_create(spark):
 def spark():
     s = get_spark(app_name="fcls-tests", master="local[4]", shuffle_partitions=8)
     yield _arrow_backed_create(s)
+
+
+@pytest.fixture()
+def dynamic_overwrite(spark):
+    """The test runs under a session whose partition-overwrite default
+    is DYNAMIC, as a user's session may set it: a full rebuild or
+    re-init must truncate under either mode."""
+    with conf_scope(spark, **{
+            "spark.sql.sources.partitionOverwriteMode": "dynamic"}):
+        yield
 
 
 @pytest.fixture(scope="session")

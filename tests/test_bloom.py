@@ -409,9 +409,10 @@ def test_refresh_many_equals_per_index_refresh(spark, tmp_path):
             BloomIndex(b, "payload").lookup(["p123"]).collect()} == {123}
 
 
-def test_downward_rebucket_rebuild_clears_stale_partitions(spark, tmp_path):
+def test_downward_rebucket_rebuild_clears_stale_partitions(
+        spark, tmp_path, dynamic_overwrite):
     """Latent-bug regression (found by the refresh_many equivalence
-    test, round 9): full rebuilds wrote with the session's DYNAMIC
+    test, round 9): full rebuilds wrote with a DYNAMIC session
     partition-overwrite default, so a rebuild after a DOWNWARD rebucket
     left the old bucket ids' rows in the words dataset — phantom
     fail-open candidates forever.  The rebuild must truncate."""

@@ -231,6 +231,40 @@ def test_crash_after_intent_heals_on_next_read(spark, tmp_path, monkeypatch):
     assert kt.compact(target_bytes=1 << 20, small_bytes=1 << 19)["groups"] == 0
 
 
+def test_crash_before_intent_leaves_no_staged_rows_behind(
+        spark, table, monkeypatch, dynamic_overwrite):
+    """A compact that crashes before its intent leaves staged files no
+    intent names.  The next compact must not rename them in: after a
+    merge rewrote three of the four buckets, those staged copies hold
+    stale row versions of keys the table already serves.  Under a
+    dynamic session they survived the next staging write."""
+    orig = KeyedTable._write_sidecar
+
+    def crash_at_intent(self, name, text):
+        if name == self.COMPACT_SIDECAR:
+            raise RuntimeError("simulated crash before intent commit")
+        return orig(self, name, text)
+
+    monkeypatch.setattr(KeyedTable, "_write_sidecar", crash_at_intent)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        table.compact(target_bytes=1 << 20, small_bytes=1 << 19)
+    monkeypatch.undo()
+    bucket_of = {r["id"]: r["_bucket"] for r in
+                 table._with_bucket(_rows(spark, range(400)))
+                 .select("id", "_bucket").collect()}
+    ids = [min(i for i, b in bucket_of.items() if b == want)
+           for want in (0, 1, 2)]
+    table.merge_batch(spark.createDataFrame(
+        [Row(id=i, ts=i * 10, payload="new", Op="U",
+             load_timestamp=dt.datetime(2024, 1, 2)) for i in ids]))
+    want = sorted((i, i * 10, "new" if i in ids else f"p{i}")
+                  for i in range(400))
+    assert _snapshot(table) == want
+    res = table.compact(target_bytes=1 << 20, small_bytes=1 << 19)
+    assert res["groups"] == 1 and res["files_added"] == 1
+    assert _snapshot(table) == want
+
+
 def test_crash_mid_swap_heals(spark, tmp_path, monkeypatch):
     """Duplicates-visible and missing-visible intermediate states are
     both unreachable through the API: recovery rolls the swap forward

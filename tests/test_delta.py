@@ -90,6 +90,38 @@ def test_upsert_insert_delete_match_eager_zero_base_rewrites(
     assert got[3][2] == 203.0 and 5 not in got and 99 in got
 
 
+def test_non_null_nested_base_column_takes_log_entries(spark, tmp_path):
+    """A base column of a non-null nested type (``array<string NOT
+    NULL>``) takes a batch whose arrays are nullable by type: the log
+    entry is cast by type name, as the eager merge casts (a cast to
+    the stored type itself fails at analysis), and reads match the
+    eager twin."""
+    from pyspark.sql import types as T
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("tags", T.ArrayType(T.StringType(),
+                                          containsNull=False))])
+    base = spark.createDataFrame([(i, [f"t{i}"]) for i in range(8)], schema)
+    eager = KeyedTable(spark, str(tmp_path / "eager"), ["id"],
+                       num_buckets=4)
+    delta = KeyedTable(spark, str(tmp_path / "delta"), ["id"],
+                       num_buckets=4, delta_upserts=True)
+    eager.init(base)
+    delta.init(base)
+    assert delta._load_schema()["tags"].dataType.containsNull is False
+    _apply_both(spark, eager, delta, [
+        Row(id=2, tags=["x", "y"], Op="U", load_timestamp=TS),
+        Row(id=5, tags=["t5"], Op="D", load_timestamp=TS),
+        Row(id=9, tags=["n"], Op="I", load_timestamp=TS)])
+
+    def snap(kt):
+        return sorted((r["id"], tuple(r["tags"])) for r in kt.read().collect())
+
+    assert snap(delta) == snap(eager)
+    got = dict(snap(delta))
+    assert got[2] == ("x", "y") and got[9] == ("n",) and 5 not in got
+
+
 def test_version_gate_matches_eager(spark, tmp_path):
     """Stale updates, stale deletes, fresh deletes, and ties all gate
     exactly like the eager merge (merge_cdc's NULL/tie contract)."""

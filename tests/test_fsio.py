@@ -1,6 +1,6 @@
 """The ``fsio`` directory swap under every crash state, and guards that
-keep dynamic partition overwrites, directory renames and the
-absent-dataset whitelist on their ``fsio`` helpers."""
+keep overwrite modes, directory renames and the absent-dataset
+whitelist on their ``fsio`` helpers."""
 
 import os
 import pathlib
@@ -13,25 +13,26 @@ from firebolt_cdc_lambda_spark import fsio
 
 
 def test_dynamic_overwrites_and_read_errors_only_through_fsio():
-    """A hand-set dynamic ``partitionOverwriteMode`` outside fsio.py is
-    a partition overwrite that can forget to drop the partitions it
-    emptied; a ``getErrorClass()`` call is the deprecated spelling of
-    the read-error condition (``fsio.is_absent``).  Only the session's
-    own default in session.py is exempt."""
+    """fsio.py is the one file that names an overwrite mode.  A partition
+    overwrite set by hand can forget to drop the partitions it emptied
+    (``fsio.overwrite_partitions``), and a full rebuild overwriting in
+    place loses the old store when it crashes mid-job; it writes a
+    fresh dir through ``fsio.replace_dir`` in the default mode.  The
+    session keeps Spark's default mode, so no write leans on it.  A
+    ``getErrorClass()`` call is the deprecated spelling of the
+    read-error condition (``fsio.is_absent``)."""
+    import re
+    overwrite = re.compile(r"partitionOverwriteMode|"
+                           r"""mode\(\s*["']overwrite["']""", re.I)
     pkg = pathlib.Path(firebolt_cdc_lambda_spark.__file__).parent
     stray = []
     for f in sorted(pkg.rglob("*.py")):
         rel = f.relative_to(pkg).as_posix()
         if rel == "fsio.py":
             continue
-        prev = ""
         for n, line in enumerate(f.read_text().splitlines(), 1):
-            dynamic = ('"dynamic"' in line
-                       and "partitionOverwriteMode" in prev + line
-                       and not (rel == "session.py" and ".config(" in line))
-            if dynamic or "getErrorClass(" in line:
+            if overwrite.search(line) or "getErrorClass(" in line:
                 stray.append(f"{rel}:{n}: {line.strip()}")
-            prev = line
     assert stray == []
 
 

@@ -150,11 +150,13 @@ def test_ivf_custom_centroids(spark, tmp_path):
     assert got.count() == 6                         # 2 queries x top-3
 
 
-def test_probe_reads_a_rebuild_made_through_another_handle(spark, tmp_path):
+def test_probe_reads_a_rebuild_made_through_another_handle(
+        spark, tmp_path, dynamic_overwrite):
     """Schema pins are per path, not per handle: after handle B rebuilds
     the index with string ids, handle A — whose earlier probe pinned
     the integer-id layout — must probe the new layout and return B's
-    ids."""
+    ids.  Under a dynamic session default, a rebuild must also leave
+    no cell of the integer-id build behind."""
     path = str(tmp_path / "ivf")
     vecs = _vectors(spark)
     a = IvfIndex(spark, path, n_centroids=4, nprobe=2)

@@ -470,12 +470,11 @@ def test_read_raw_only_absent_paths_read_as_empty(spark, tmp_path):
         t2._read_raw(buckets=[0, 1])
 
 
-def test_reinit_truncates_all_buckets(spark, tmp_path):
+def test_reinit_truncates_all_buckets(spark, tmp_path, dynamic_overwrite):
     """Review regression: init on an EXISTING non-versioned table must
-    truncate the whole path.  The session default is dynamic partition
-    overwrite (the merge path's mode), under which a re-init whose rows
-    miss some buckets would leave those buckets serving the previous
-    table's rows."""
+    truncate the whole path.  Under a dynamic partition-overwrite
+    session an in-place re-init whose rows miss some buckets left those
+    buckets serving the previous table's rows."""
     from pyspark.sql import Row
     kt = KeyedTable(spark, str(tmp_path / "t"), ["k"], num_buckets=8)
     kt.init(spark.createDataFrame([Row(k=i, v="old") for i in range(32)]))

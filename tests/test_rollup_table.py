@@ -95,3 +95,21 @@ def test_refresh_empty_batch_noop(spark, env):
     before = as_map(rt)
     n = rt.refresh(kt.read(), kt.read().select("status").where("1=0"))
     assert n == 0 and as_map(rt) == before
+
+
+def test_reinit_into_fewer_buckets_drops_vacated_groups(
+        spark, tmp_path, dynamic_overwrite):
+    """A full reload whose aggregate fills fewer buckets than the store
+    holds: every group gone from the base must leave the rollup, under
+    a dynamic session default too (an in-place dynamic overwrite kept
+    the vacated buckets' groups)."""
+    rt = RollupTable(spark, str(tmp_path / "r"), ["status"], aggs,
+                     num_buckets=4)
+    many = spark.createDataFrame(
+        [Row(id=i, status=f"s{i % 12}", amt=float(i)) for i in range(48)])
+    rt.init(many)
+    assert len({r["_gbucket"] for r in
+                spark.read.parquet(rt.path).collect()}) > 1
+    one = spark.createDataFrame([Row(id=1, status="s1", amt=5.0)])
+    rt.init(one)
+    assert as_map(rt) == full_rollup(one) == {"s1": (1, 5.0)}

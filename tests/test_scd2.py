@@ -175,9 +175,11 @@ def test_scd2_table_apply_prunes_buckets(spark, tmp_path):
     assert len(out) == 65
 
 
-def test_scd2_table_init_wipes_prior_content(spark, tmp_path):
-    """init is a STATIC overwrite: re-initializing over an old table
-    leaves no stale buckets behind (a dynamic overwrite would)."""
+def test_scd2_table_init_wipes_prior_content(spark, tmp_path,
+                                              dynamic_overwrite):
+    """init replaces the whole store: re-initializing over an old table
+    leaves no stale buckets behind, whatever the session's
+    partition-overwrite mode (an in-place dynamic overwrite would)."""
     from firebolt_cdc_lambda_spark.operators.scd2 import Scd2Table
     p = str(tmp_path / "dim")
     t = Scd2Table(spark, p, KEYS, ORDER, TRACKED, num_buckets=16)

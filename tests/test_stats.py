@@ -673,7 +673,8 @@ def test_refresh_with_every_dirty_bucket_emptied(spark, tmp_path):
     assert got == sorted(set(range(100)) - set(victims))
 
 
-def test_downward_rebucket_rebuild_clears_stale_partitions(spark, tmp_path):
+def test_downward_rebucket_rebuild_clears_stale_partitions(
+        spark, tmp_path, dynamic_overwrite):
     """Stats twin of the bloom regression (round 9): stale old-bucket
     stats rows after a downward rebucket referenced vanished files,
     degrading EVERY probe to a permanent full scan.  The rebuild must
